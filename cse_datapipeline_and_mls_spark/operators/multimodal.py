@@ -433,11 +433,7 @@ def decode_media(content: bytes, modality: str):
     raise ValueError(f"decode_media: unsupported modality {modality!r}")
 
 
-def extract_features(
-    media: DataFrame,
-    decoder=None,
-    batch_size_hint: int | None = None,
-) -> DataFrame:
+def extract_features(media: DataFrame, decoder=None) -> DataFrame:
     """Per-payload feature extraction via ``mapInPandas`` — the Arrow
     batch path a real decoder would use (bytes → decode → embed).
 

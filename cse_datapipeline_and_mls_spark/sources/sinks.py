@@ -29,6 +29,7 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql import types as T
 
 
 def write_partitioned(
@@ -163,13 +164,28 @@ def merge_upsert_parquet(
     caller choice rather than a silent cliff.
 
     Updates whose ``partition_col`` value lands in a brand-new
-    partition still work: dynamic overwrite creates the directory.
+    partition still work: dynamic overwrite creates the directory. So
+    does a table that does not exist yet (a missing path or an empty
+    directory): the updates merge into an empty target carrying their
+    own columns (minus ``delete_col``), so the first batch gets the same
+    ``order_col`` dedup and tombstone drops as every later one.
     """
+    import os
     import shutil
+
+    from pyspark.errors import AnalysisException
 
     from ..operators.relational import merge_upsert
 
-    target = spark.read.parquet(path)
+    try:
+        target = spark.read.parquet(path)
+    except AnalysisException as exc:
+        if exc.getCondition() not in ("PATH_NOT_FOUND", "UNABLE_TO_INFER_SCHEMA"):
+            raise
+        delete_col = merge_kwargs.get("delete_col")
+        target = spark.createDataFrame(
+            [], T.StructType([f for f in updates.schema if f.name != delete_col])
+        )
     if partition_col is not None:
         if partition_col not in updates.columns:
             raise ValueError(
@@ -182,18 +198,19 @@ def merge_upsert_parquet(
         # a write whose plan still reads the destination path
         merged = merged.localCheckpoint(eager=True)
         n = merged.count()
-        prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        finally:
-            spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
+        # dynamic overwrite as a per-write option: a session-conf flip
+        # is not thread-safe (a sibling thread restoring "static"
+        # mid-write would wipe untouched partitions)
+        merged.write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy(partition_col).parquet(path)
         return n
     merged = merge_upsert(target, updates, keys, **merge_kwargs)
     stage = path.rstrip("/") + "._stage"
     merged.write.mode("overwrite").parquet(stage)
     n = spark.read.parquet(stage).count()
-    shutil.rmtree(path)
+    if os.path.isdir(path):
+        shutil.rmtree(path)
     shutil.move(stage, path)
     return n
 

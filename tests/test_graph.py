@@ -627,16 +627,6 @@ def test_katz_two_cycle_closed_form(spark):
     assert k[2]["katz"] == expect
 
 
-def test_katz_rejects_nonpositive_checkpoint_every(spark):
-    # ADVICE r9: checkpoint_every=0 used to surface as a
-    # ZeroDivisionError at `k % checkpoint_every` deep in plan
-    # construction; it must fail fast at validation like iters/alpha_inv.
-    import pytest
-
-    with pytest.raises(ValueError, match="checkpoint_every"):
-        _katz(spark, [(1, 2)], iters=2, alpha_inv=20, checkpoint_every=0)
-
-
 def test_katz_star_hub_beats_leaves(spark):
     # undirected star, hub 0 with 4 leaves: hub collects 4 length-1
     # walks, each leaf only 1 — path-weighted influence orders them.

@@ -92,8 +92,12 @@ def test_parquet_partition_selective_rewrite(spark, tmp_path):
         [(2, "2024-01-01", 99.0), (9, "2024-01-03", 90.0)],
         "id bigint, day string, bal double",
     )
+    conf_key = "spark.sql.sources.partitionOverwriteMode"
+    conf_before = spark.conf.get(conf_key)
     n = merge_upsert_parquet(spark, path, updates, ["id", "day"], partition_col="day")
     assert n == 3  # rows written for the two touched partitions
+    # dynamic overwrite is a per-write option, never a session-conf flip
+    assert spark.conf.get(conf_key) == conf_before
 
     # note: hive partition discovery re-infers the partition column as
     # DATE, hence str() normalization
@@ -110,6 +114,31 @@ def test_parquet_partition_selective_rewrite(spark, tmp_path):
     untouched_after = sorted(glob.glob(f"{path}/day=2024-01-02/*.parquet"))
     assert untouched_after == untouched_before
     assert [os.path.getmtime(f) for f in untouched_after] == mtimes_before
+
+
+def test_parquet_partitioned_upsert_creates_missing_table(spark, tmp_path):
+    """The first batch may land before the table exists: it is merged
+    into an empty target, so order_col dedup and tombstones still apply
+    and the tombstone column is not written."""
+    path = str(tmp_path / "new_tbl")
+    updates = spark.createDataFrame(
+        [
+            (1, "2024-01-01", 10.0, 1, False),
+            (1, "2024-01-01", 11.0, 2, False),
+            (2, "2024-01-02", 20.0, 1, True),
+            (3, "2024-01-02", 30.0, 1, False),
+        ],
+        "id bigint, day string, bal double, v int, deleted boolean",
+    )
+    n = merge_upsert_parquet(
+        spark, path, updates, ["id", "day"], partition_col="day",
+        order_col="v", delete_col="deleted",
+    )
+    assert n == 2
+    back = spark.read.parquet(path)
+    assert "deleted" not in back.columns
+    got = {(r["id"], str(r["day"])): r["bal"] for r in back.collect()}
+    assert got == {(1, "2024-01-01"): 11.0, (3, "2024-01-02"): 30.0}
 
 
 def test_parquet_full_rewrite_fallback(spark, tmp_path):

@@ -188,3 +188,40 @@ def test_pca_finds_dominant_axis(spark):
 
     ev = pca_explained_variance(fit_pca(df, "embedding", k=3))
     assert ev[0] > 0.95
+
+
+def test_item_neighbor_refresh_same_on_persisted_and_lazy_state(spark, sf_dir):
+    """refresh_item_neighbors returns the same (topnb, pur) rows whether
+    the corpus state is localCheckpoint-ed (bench.py's refresh leg) or
+    lazy (the registry query), and both equal the full recompute."""
+    from pyspark import StorageLevel
+
+    from cse_datapipeline_and_mls_spark.queries import ml_q
+
+    li, corpus_o, delta_o = ml_q.split_orders_at_watermark(spark, sf_dir)
+    assert delta_o.count() > 0
+
+    def state(ck):
+        c_o = ck(corpus_o)
+        pairs = ck(ml_q.pair_counts(li, c_o))
+        return (
+            li,
+            ck(delta_o),
+            pairs,
+            ck(ml_q.top_neighbors(pairs)),
+            ck(ml_q.purchases(li, c_o)),
+        )
+
+    def rows(df):
+        return sorted(map(tuple, df.collect()))
+
+    lazy = ml_q.refresh_item_neighbors(*state(lambda df: df))
+    persisted = ml_q.refresh_item_neighbors(
+        *state(lambda df: df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY))
+    )
+    orders = corpus_o.unionByName(delta_o)
+    full = (ml_q.top_neighbors(ml_q.pair_counts(li, orders)), ml_q.purchases(li, orders))
+    for got_lazy, got_persisted, want in zip(lazy, persisted, full):
+        want_rows = rows(want)
+        assert want_rows
+        assert rows(got_lazy) == rows(got_persisted) == want_rows

@@ -20,7 +20,8 @@ import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 # Queries where an all-pairs/broadcast-nested-loop or global window is the
 # documented intent (small side broadcast or serving-edge pagination).

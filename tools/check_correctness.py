@@ -11,10 +11,12 @@ from __future__ import annotations
 
 import argparse
 import math
+import os
 import sys
 import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 TABLES = (
     "region nation customer supplier part orders lineitem events documents embeddings"
@@ -57,7 +59,7 @@ def _names_new_since(rev: str, registry) -> list[str]:
     import subprocess
 
     ls = subprocess.run(
-        ["git", "-C", "/root/repo", "ls-tree", "-r", "--name-only", rev],
+        ["git", "-C", ROOT, "ls-tree", "-r", "--name-only", rev],
         capture_output=True,
         text=True,
         check=True,
@@ -68,7 +70,7 @@ def _names_new_since(rev: str, registry) -> list[str]:
         if not path.endswith(".py"):
             continue
         show = subprocess.run(
-            ["git", "-C", "/root/repo", "show", f"{rev}:{path}"],
+            ["git", "-C", ROOT, "show", f"{rev}:{path}"],
             capture_output=True,
             text=True,
         )

@@ -23,10 +23,11 @@ import argparse
 import json
 import os
 import sys
-import threading
-import time
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+
+from sf1_engine_sweep import run_with_watchdog  # noqa: E402
 
 
 def main() -> int:
@@ -47,7 +48,7 @@ def main() -> int:
     if args.names:
         names = args.names
     else:
-        with open("/root/repo/BENCH_local.json") as fh:
+        with open(os.path.join(ROOT, "BENCH_local.json")) as fh:
             bench = json.load(fh)
         allq = {**bench.get("coverage_queries", {}), **bench.get("queries", {})}
         names = [
@@ -65,7 +66,7 @@ def main() -> int:
             f"local-cluster[{args.workers},{args.cores},{args.mem}]"
         )
         .appName("local_cluster_sweep")
-        .config("spark.executorEnv.PYTHONPATH", "/root/repo")
+        .config("spark.executorEnv.PYTHONPATH", ROOT)
         .config("spark.executor.memory", f"{args.mem}m")
         .config("spark.sql.shuffle.partitions", str(args.workers * args.cores))
         .config("spark.sql.adaptive.enabled", "true")
@@ -85,38 +86,11 @@ def main() -> int:
         flush=True,
     )
 
-    results: dict[str, float | str] = {}
-    n_err = 0
-    for name in names:
-        fired = threading.Event()
-        cancelled = threading.Event()
-        sc.setJobGroup(name, f"local-cluster sweep: {name}", interruptOnCancel=True)
-
-        def watchdog(group: str = name) -> None:
-            if not fired.wait(args.cap):
-                cancelled.set()
-                while not fired.is_set():
-                    sc.cancelJobGroup(group)
-                    fired.wait(2.0)
-
-        w = threading.Thread(target=watchdog, daemon=True)
-        w.start()
-        t0 = time.time()
-        try:
-            QUERIES[name](spark, args.sf).write.format("noop").mode("overwrite").save()
-            dt = round(time.time() - t0, 1)
-            results[name] = dt
-            print(f"OK      {name}: {dt}s", flush=True)
-        except Exception as exc:
-            dt = round(time.time() - t0, 1)
-            kind = "TIMEOUT" if cancelled.is_set() else "ERROR"
-            results[name] = f"{kind}@{dt}s"
-            n_err += 1
-            print(f"{kind} {name}: {dt}s {str(exc).splitlines()[0][:200]}", flush=True)
-        finally:
-            fired.set()
-            w.join()
-
+    results = {
+        name: run_with_watchdog(spark, name, args.sf, args.cap, "local-cluster sweep")
+        for name in names
+    }
+    n_err = sum(not isinstance(v, float) for v in results.values())
     ok = sum(1 for v in results.values() if isinstance(v, float))
     print(f"\n{ok}/{len(results)} OK, {n_err} failed", flush=True)
     return 1 if n_err else 0

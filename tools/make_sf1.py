@@ -64,8 +64,7 @@ def main() -> None:
         action="store_true",
         help="tag every document word with the replica id so replica texts "
         "are content-DISJOINT (pair counts scale linearly — the right "
-        "corpus for near-dup/minhash checks, same stance as "
-        "scale_smoke.py's dedup_survivors_docs case); the default exact-"
+        "corpus for near-dup/minhash checks); the default exact-"
         "duplicate replication preserves text distributions but is "
         "ADVERSARIAL for banded near-dup oracles (every doc gains "
         "replicas-1 identical twins, so candidate pairs grow x replicas^2)",
