@@ -16,7 +16,7 @@ from ..operators.numeric import q6 as _q6
 from ..operators.relational import assign_dense_ids
 from ..operators.tswindow import kaplan_meier, spine_cumsum, spine_window
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 
 @register(
@@ -1055,9 +1055,14 @@ def agg_woe_iv_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).orderBy("o_orderpriority")
 
 
-@register(
+# Welch's unequal-variance t-test: does the extended price of returned
+# lineitems (l_returnflag='R') differ from the rest? Conditional
+# aggregation computes both cohorts' moments in one map-side partial agg
+# + 1-row final combine: no second scan, no join, no group-by shuffle of
+# the fact table. var_samp (ddof=1) is pinned to match DuckDB's.
+register_sql(
     "agg_welch_ttest",
-    oracle="""
+    """
     WITH s AS (
       SELECT
         sum(CASE WHEN l_returnflag = 'R' THEN 1 ELSE 0 END)      AS n_r,
@@ -1066,7 +1071,7 @@ def agg_woe_iv_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
         avg(CASE WHEN l_returnflag <> 'R' THEN l_extendedprice END) AS mean_o,
         var_samp(CASE WHEN l_returnflag = 'R' THEN l_extendedprice END)  AS v_r,
         var_samp(CASE WHEN l_returnflag <> 'R' THEN l_extendedprice END) AS v_o
-      FROM lineitem
+      FROM {lineitem}
     ), se AS (
       SELECT n_r, n_o, mean_r, mean_o, v_r, v_o,
              v_r / n_r AS se2_r, v_o / n_o AS se2_o
@@ -1084,52 +1089,6 @@ def agg_woe_iv_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM se
     """,
 )
-def agg_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Welch's unequal-variance t-test between two cohorts in one scan:
-    does the extended price of RETURNED lineitems (l_returnflag='R')
-    differ from the rest? Emits group sizes, means, the t statistic,
-    and the Welch–Satterthwaite degrees of freedom — the A/B-test
-    primitive an analytics engine runs constantly.
-
-    Scale: conditional aggregation (sum/avg/var_samp over CASE
-    expressions) computes BOTH cohorts' moments in a single map-side
-    partial agg + 1-row final combine — no second scan, no join, no
-    group-by shuffle of the fact table; at 100 TB the cost is the
-    scan. The t and df formulas are pure 1-row float expressions with
-    identical association on both engines; var_samp flavor is pinned
-    explicitly (ddof=1) to match DuckDB's."""
-    li = load_table(spark, sf_dir, "lineitem")
-    is_r = F.col("l_returnflag") == "R"
-    s = li.agg(
-        F.sum(F.when(is_r, 1).otherwise(0)).alias("n_r"),
-        F.sum(F.when(~is_r, 1).otherwise(0)).alias("n_o"),
-        F.avg(F.when(is_r, F.col("l_extendedprice"))).alias("mean_r"),
-        F.avg(F.when(~is_r, F.col("l_extendedprice"))).alias("mean_o"),
-        F.var_samp(F.when(is_r, F.col("l_extendedprice"))).alias("v_r"),
-        F.var_samp(F.when(~is_r, F.col("l_extendedprice"))).alias("v_o"),
-    )
-    se = s.select(
-        "*",
-        (F.col("v_r") / F.col("n_r")).alias("se2_r"),
-        (F.col("v_o") / F.col("n_o")).alias("se2_o"),
-    )
-    return se.select(
-        F.col("n_r").cast("long").alias("n_r"),
-        F.col("n_o").cast("long").alias("n_o"),
-        _q6(F.col("mean_r")).alias("mean_r"),
-        _q6(F.col("mean_o")).alias("mean_o"),
-        _q6(
-            (F.col("mean_r") - F.col("mean_o"))
-            / F.sqrt(F.col("se2_r") + F.col("se2_o"))
-        ).alias("t_stat"),
-        _q6(
-            (F.col("se2_r") + F.col("se2_o")) * (F.col("se2_r") + F.col("se2_o"))
-            / (
-                F.col("se2_r") * F.col("se2_r") / (F.col("n_r") - 1)
-                + F.col("se2_o") * F.col("se2_o") / (F.col("n_o") - 1)
-            )
-        ).alias("df_welch"),
-    )
 
 
 @register(
@@ -2435,9 +2394,16 @@ def agg_trimmed_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# One-way ANOVA F across the five order priorities on rounded-dollar
+# order totals: the k-group extension of agg_welch_ttest. Every moment is
+# an exact int64 (per-group counts and dollar sums, the global sum of
+# squares; int64-safe to ~3e7 rows), and SSB/SSW are fixed-associativity
+# float chains over them (SSB = sum(s_g^2/n_g) - s^2/n avoids per-row
+# residuals), so both engines run the same IEEE-754 expression. One
+# conditional-aggregation scan: no group-by shuffle, no second pass.
+register_sql(
     "agg_anova_f_priority",
-    oracle="""
+    """
     WITH m AS (
       SELECT
         CAST(count(*) AS BIGINT) AS n,
@@ -2458,7 +2424,7 @@ def agg_trimmed_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
                  THEN CAST(round(o_totalprice) AS BIGINT) ELSE 0 END) AS BIGINT) AS s5,
         CAST(sum(CAST(round(o_totalprice) AS BIGINT)
                * CAST(round(o_totalprice) AS BIGINT)) AS BIGINT) AS ss
-      FROM orders
+      FROM {orders}
     ), f AS (
       SELECT n, n1, n2, n3, n4, n5,
              (CAST(s1 AS DOUBLE) * s1 / n1 + CAST(s2 AS DOUBLE) * s2 / n2
@@ -2481,69 +2447,6 @@ def agg_trimmed_mean_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM f
     """,
 )
-def agg_anova_f_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """One-way ANOVA F across the five TPC-H order priorities on
-    rounded-dollar order totals — the k-group extension of
-    agg_welch_ttest's two-cohort comparison (the experimentation
-    primitive for 'does this categorical treatment move the metric').
-
-    Determinism design: unlike Welch (float var_samp + q6), every
-    moment here is an EXACT int64 — per-group counts, per-group
-    dollar sums, and the global sum of squares, all conditional
-    aggregations over integer dollars (round(o_totalprice); squares
-    bounded ~2.5e11 per row, int64-safe to ~3e7 rows per the OLS
-    bound) — and SSB/SSW are FIXED-ASSOCIATIVITY float chains over
-    those integers (the identity SSB = Σ s_g²/n_g − s²/n avoids
-    per-row residuals entirely), so both engines run the identical
-    IEEE-754 expression and only the display quantization rounds.
-
-    Scale: ONE conditional-aggregation scan — map-side partial agg to
-    a single row, no group-by shuffle, no second pass; at 100 TB the
-    cost is the parquet scan of two columns."""
-    o = load_table(spark, sf_dir, "orders")
-    d = F.round(F.col("o_totalprice")).cast("long")
-    pr = F.col("o_orderpriority")
-    pris = ["1-URGENT", "2-HIGH", "3-MEDIUM", "4-NOT SPECIFIED", "5-LOW"]
-    aggs = [F.count(F.lit(1)).cast("long").alias("n")]
-    for i, p in enumerate(pris, start=1):
-        aggs.append(
-            F.sum(F.when(pr == p, 1).otherwise(0)).cast("long").alias(f"n{i}")
-        )
-    for i, p in enumerate(pris, start=1):
-        aggs.append(
-            F.sum(F.when(pr == p, d).otherwise(0)).cast("long").alias(f"s{i}")
-        )
-    aggs.append(F.sum(d * d).cast("long").alias("ss"))
-    m = o.agg(*aggs)
-
-    def dbl(c):
-        return F.col(c).cast("double")
-
-    grp = (
-        dbl("s1") * F.col("s1") / F.col("n1")
-        + dbl("s2") * F.col("s2") / F.col("n2")
-        + dbl("s3") * F.col("s3") / F.col("n3")
-        + dbl("s4") * F.col("s4") / F.col("n4")
-        + dbl("s5") * F.col("s5") / F.col("n5")
-    )
-    stot = F.col("s1") + F.col("s2") + F.col("s3") + F.col("s4") + F.col("s5")
-    ssb = grp - stot.cast("double") * stot / F.col("n")
-    ssw = dbl("ss") - grp
-    f = m.select(
-        "n", "n1", "n2", "n3", "n4", "n5",
-        ssb.alias("ssb"), ssw.alias("ssw"),
-    )
-    q3 = lambda c: F.floor(c * 1000 + F.lit(0.5)) / 1000  # noqa: E731
-    return f.select(
-        "n", "n1", "n2", "n3", "n4", "n5",
-        q3(F.col("ssb")).alias("ss_between"),
-        q3(F.col("ssw")).alias("ss_within"),
-        F.lit(4).cast("long").alias("df_between"),
-        (F.col("n") - 5).alias("df_within"),
-        _q6((F.col("ssb") / 4.0) / (F.col("ssw") / (F.col("n") - 5))).alias(
-            "f_stat"
-        ),
-    )
 
 
 @register(

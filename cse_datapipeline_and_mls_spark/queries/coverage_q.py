@@ -10,68 +10,47 @@ from pyspark.sql import functions as F
 
 from ..operators.asof import asof_join
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 
 from ..operators.numeric import q6 as _q6  # engine-wide 6-decimal quantizer
 
 
-@register(
+# P6: date-range predicate, pushed to the parquet scan (partition-prunable
+# when the table is date-partitioned at scale; reference
+# regression.py:217-218).
+register_sql(
     "p_date_range_filter",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber, l_shipdate
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-07-01'
     """,
 )
-def p_date_range_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P6: date-range predicate — pushed to the parquet scan (partition-
-    prunable when the table is date-partitioned at scale; reference
-    regression.py:217-218)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.filter(
-        (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-        & (F.col("l_shipdate") < F.lit("1996-07-01").cast("timestamp"))
-    ).select("l_orderkey", "l_linenumber", "l_shipdate")
 
 
-@register(
+# P8 small-list flavor: an IN predicate in the scan filter (the
+# distributed allow-list flavor is semi_join_building_orders).
+register_sql(
     "p_membership_isin",
-    oracle="""
+    """
     SELECT user_id, count(*) AS n
-    FROM events WHERE event_type IN ('click', 'buy')
+    FROM {events} WHERE event_type IN ('click', 'buy')
     GROUP BY user_id
     """,
 )
-def p_membership_isin(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P8 small-list flavor: Column.isin compiles to an IN predicate in
-    the scan filter (the distributed allow-list flavor is
-    semi_join_building_orders)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("event_type").isin("click", "buy"))
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
-@register(
+# P9: keep rows after a cutoff (reference ml_impl.py:155-156 filters
+# prediction_date > now; a literal cutoff here for determinism).
+register_sql(
     "p_future_date_filter",
-    oracle="""
+    """
     SELECT event_type, count(*) AS n
-    FROM events WHERE ts > TIMESTAMP '2024-01-15 00:00:00'
+    FROM {events} WHERE ts > TIMESTAMP '2024-01-15 00:00:00'
     GROUP BY event_type
     """,
 )
-def p_future_date_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """P9: keep rows after a cutoff (reference ml_impl.py:155-156 filters
-    prediction_date > now; a literal cutoff here for determinism)."""
-    ev = load_table(spark, sf_dir, "events")
-    return (
-        ev.filter(F.col("ts") > F.lit("2024-01-15 00:00:00").cast("timestamp"))
-        .groupBy("event_type")
-        .agg(F.count(F.lit(1)).alias("n"))
-    )
 
 
 @register(
@@ -151,28 +130,20 @@ def j_asof_forward_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# O6: page 2 of a sorted listing via a row_number band (reference
+# index.js:220-223 slices [page*10, page*10+10] client-side). The global
+# row_number needs a single-partition window: fine for a serving page,
+# not for bulk export (use range partitioning there).
+register_sql(
     "o_pagination_orders",
-    oracle="""
+    """
     SELECT o_orderkey, o_totalprice, rn
     FROM (SELECT o_orderkey, o_totalprice,
                  row_number() OVER (ORDER BY o_totalprice DESC, o_orderkey) AS rn
-          FROM orders) t
+          FROM {orders}) t
     WHERE rn BETWEEN 11 AND 20
     """,
 )
-def o_pagination_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """O6: page 2 of a sorted listing via row_number band (reference
-    index.js:220-223 slices [page*10, page*10+10] client-side). The
-    global row_number needs a single-partition window — fine for a
-    serving page, not for bulk export (use range partitioning there)."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.orderBy(F.desc("o_totalprice"), F.asc("o_orderkey"))
-    return (
-        o.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn").between(11, 20))
-        .select("o_orderkey", "o_totalprice", "rn")
-    )
 
 
 @register(
@@ -327,14 +298,17 @@ def j_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Full outer join (SURVEY §2.3 absent list). Both inputs share the
+# user_id hash partitioning from their aggregations, so the outer join
+# reuses the exchange (no extra shuffle under AQE).
+register_sql(
     "j_full_outer_click_buy",
-    oracle="""
+    """
     WITH clicks AS (
-      SELECT user_id, count(*) AS n_clicks FROM events
+      SELECT user_id, count(*) AS n_clicks FROM {events}
       WHERE event_type = 'click' GROUP BY user_id
     ), buys AS (
-      SELECT user_id, count(*) AS n_buys FROM events
+      SELECT user_id, count(*) AS n_buys FROM {events}
       WHERE event_type = 'buy' GROUP BY user_id
     )
     SELECT coalesce(c.user_id, b.user_id) AS user_id,
@@ -343,29 +317,6 @@ def j_range_price_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM clicks c FULL OUTER JOIN buys b ON c.user_id = b.user_id
     """,
 )
-def j_full_outer_click_buy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full outer join — SURVEY §2.3 absent list. Both inputs share the
-    user_id hash partitioning from their aggregations, so the outer join
-    reuses the exchange (no extra shuffle under AQE)."""
-    ev = load_table(spark, sf_dir, "events")
-    clicks = (
-        ev.filter(F.col("event_type") == "click")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_clicks"))
-    )
-    buys = (
-        ev.filter(F.col("event_type") == "buy")
-        .groupBy("user_id")
-        .agg(F.count(F.lit(1)).alias("n_buys"))
-    )
-    joined = clicks.alias("c").join(
-        buys.alias("b"), F.col("c.user_id") == F.col("b.user_id"), "full_outer"
-    )
-    return joined.select(
-        F.coalesce(F.col("c.user_id"), F.col("b.user_id")).alias("user_id"),
-        F.coalesce(F.col("n_clicks"), F.lit(0)).alias("n_clicks"),
-        F.coalesce(F.col("n_buys"), F.lit(0)).alias("n_buys"),
-    )
 
 
 @register(
@@ -704,37 +655,22 @@ def w_range_frame_hourly_sum(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Batch twin of the stateful streaming operator
+# (streaming.stateful.running_zscore_anomalies), which keeps the same
+# cumulative mean/stddev_pop as O(1) Welford state per key; stream/batch
+# parity is asserted in tests/test_streaming.py.
+register_sql(
     "w_running_zscore",
-    oracle="""
+    """
     SELECT event_id, user_id,
            CASE WHEN stddev_pop(value) OVER w > 0
                 THEN round((value - avg(value) OVER w) / stddev_pop(value) OVER w, 6)
                 ELSE 0 END AS running_z
-    FROM events
+    FROM {events}
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
     """,
 )
-def w_running_zscore(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stateful streaming operator
-    (streaming.stateful.running_zscore_anomalies): cumulative per-key
-    mean/stddev_pop → z-score. The streaming side maintains the same
-    quantity as O(1) Welford state per key via applyInPandasWithState;
-    stream/batch parity is asserted in tests/test_streaming.py."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    std = F.stddev_pop("value").over(w)
-    z = (F.col("value") - F.avg("value").over(w)) / std
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.when(std > 0, F.round(z, 6)).otherwise(F.lit(0.0)).alias("running_z"),
-    )
 
 
 @register(
@@ -1089,9 +1025,13 @@ def agg_width_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Equal-frequency binning (QuantileDiscretizer semantics, exact): the
+# unique tiebreaker keeps bin assignment engine-invariant. Partitioned
+# window, no global sort; the approx companion at scale is
+# approx_percentile cut points (agg_approx_percentile).
+register_sql(
     "w_ntile_binning",
-    oracle="""
+    """
     SELECT o_orderpriority, quartile,
            count(*) AS n,
            round(min(o_totalprice), 4) AS lo,
@@ -1099,27 +1039,10 @@ def agg_width_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM (SELECT o_orderpriority, o_totalprice,
                  ntile(4) OVER (PARTITION BY o_orderpriority
                                 ORDER BY o_totalprice, o_orderkey) AS quartile
-          FROM orders) t
+          FROM {orders}) t
     GROUP BY 1, 2
     """,
 )
-def w_ntile_binning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Equal-frequency binning (QuantileDiscretizer semantics, exact):
-    ntile(4) per order priority with a unique tiebreaker so bin
-    assignment is engine-invariant, then per-bin stats. Partitioned
-    window — no global sort; the approx companion at 100 TB is
-    approx_percentile cut points (agg_approx_percentile)."""
-    o = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy("o_totalprice", "o_orderkey")
-    return (
-        o.select("o_orderpriority", "o_totalprice", F.ntile(4).over(w).alias("quartile"))
-        .groupBy("o_orderpriority", "quartile")
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.round(F.min("o_totalprice"), 4).alias("lo"),
-            F.round(F.max("o_totalprice"), 4).alias("hi"),
-        )
-    )
 
 
 @register(
@@ -2481,36 +2404,22 @@ def j_asof_nearest_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Top-N per group: the rank-filter shape lets Spark insert
+# WindowGroupLimit below the shuffle, so each map task forwards only its
+# local top-3 per group (asserted on the plan in tests/test_relational.py).
+register_sql(
     "o_topn_per_group",
-    oracle="""
+    """
     SELECT o_orderpriority, o_orderkey, o_totalprice,
            CAST(rk AS INT) AS rk
     FROM (
       SELECT o_orderpriority, o_orderkey, o_totalprice,
              row_number() OVER (PARTITION BY o_orderpriority
                                 ORDER BY o_totalprice DESC, o_orderkey) AS rk
-      FROM orders
+      FROM {orders}
     ) WHERE rk <= 3
     """,
 )
-def o_topn_per_group(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Top-N PER GROUP (the group-limit flavor of O2's global top-k):
-    top-3 orders by price within each order priority. The rank-filter
-    shape lets Spark insert WindowGroupLimit below the shuffle, so each
-    map task forwards only its local top-3 per group instead of sorting
-    whole partitions — the same operator-level guarantee
-    TakeOrderedAndProject gives the global case, asserted on the plan
-    in tests/test_relational.py."""
-    orders = load_table(spark, sf_dir, "orders")
-    w = Window.partitionBy("o_orderpriority").orderBy(
-        F.desc("o_totalprice"), F.asc("o_orderkey")
-    )
-    return (
-        orders.select("o_orderpriority", "o_orderkey", "o_totalprice")
-        .withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= 3)
-    )
 
 
 @register(
@@ -2722,16 +2631,19 @@ def x_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Maximum drawdown per user series (largest peak-to-trough drop relative
+# to the running peak). The running max and the keyed min are both on
+# user_id, so a cluster plans a single exchange.
+register_sql(
     "w_max_drawdown",
-    oracle="""
+    """
     WITH runs AS (
       SELECT user_id, ts, event_id, value,
              max(value) OVER (PARTITION BY user_id
                               ORDER BY ts, event_id
                               ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW)
                AS run_max
-      FROM events
+      FROM {events}
     ), dd AS (
       SELECT user_id,
              (value - run_max) / nullif(run_max, 0) AS drawdown
@@ -2742,29 +2654,6 @@ def x_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM dd GROUP BY user_id
     """,
 )
-def w_max_drawdown(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Maximum drawdown per user series — the classic risk metric
-    (largest peak-to-trough drop relative to the running peak; the
-    reference's stock domain makes this a first-class ask). One running
-    max over the (user, time) sort + one keyed min — both on user_id,
-    so a cluster plans a single exchange. The most-negative ratio is
-    q6-quantized on both sides (money-like values land on 6-decimal
-    boundaries)."""
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("long").alias("user_id"), "ts", "event_id", "value"
-    )
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, 0)
-    )
-    dd = ev.withColumn("run_max", F.max("value").over(w)).select(
-        "user_id",
-        ((F.col("value") - F.col("run_max")) / F.nullif(F.col("run_max"), F.lit(0))).alias(
-            "drawdown"
-        ),
-    )
-    return dd.groupBy("user_id").agg(_q6(F.min("drawdown")).alias("max_drawdown"))
 
 
 @register(

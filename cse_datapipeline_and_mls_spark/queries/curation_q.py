@@ -17,18 +17,23 @@ from pyspark.sql import functions as F
 from ..operators import dedup as D
 from ..operators.numeric import q6 as _q6
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 from .coverage_q import _lpa_ctes
 
 
-@register(
+# Per-domain document cap: keep at most K=20 documents per source,
+# preferring longer ones, so one prolific domain can't dominate the
+# training mix (C4 and successors cap per-domain contributions). One hash
+# shuffle on source; at web scale a broadcast groupBy(source).count()
+# pre-pass would let only the over-cap domains run the rank sort.
+register_sql(
     "x_domain_cap_documents",
-    oracle="""
+    """
     WITH ranked AS (
       SELECT source, doc_id, n_chars,
              row_number() OVER (PARTITION BY source
                                 ORDER BY n_chars DESC, doc_id) AS rn
-      FROM documents
+      FROM {documents}
     )
     SELECT source,
            CAST(count(*) AS BIGINT)                                   AS n_docs,
@@ -41,38 +46,6 @@ from .coverage_q import _lpa_ctes
     ORDER BY source
     """,
 )
-def x_domain_cap_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-domain document cap — the anti-over-representation pass web
-    corpora run so one prolific domain can't dominate the training mix
-    (C4 and successors cap or downweight per-domain contributions).
-    Keep at most K=20 documents per source, preferring longer documents
-    (n_chars DESC, doc_id tiebreak), and report kept/dropped counts and
-    retained characters per source.
-
-    Scale: one hash shuffle on ``source``; the per-source rank is a
-    window sort whose partition size a hot domain inflates — but the
-    production mitigation is already in the plan's shape: a pre-pass
-    ``groupBy(source).count()`` broadcast lets you rank ONLY the
-    over-cap domains (the overwhelming majority of domains at web scale
-    fall under the cap and skip the sort entirely), and within a single
-    pathological domain the rank-then-filter can run as a per-partition
-    top-K (each partition keeps its local top-K before the global
-    rank — the TakeOrderedAndProject idea applied per key)."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("source").orderBy(F.desc("n_chars"), F.asc("doc_id"))
-    ranked = docs.select("source", "doc_id", "n_chars", F.row_number().over(w).alias("rn"))
-    return (
-        ranked.groupBy("source")
-        .agg(
-            F.count(F.lit(1)).alias("n_docs"),
-            F.sum(F.when(F.col("rn") <= 20, 1).otherwise(0)).cast("long").alias("n_kept"),
-            F.sum(F.when(F.col("rn") > 20, 1).otherwise(0)).cast("long").alias("n_dropped"),
-            F.sum(F.when(F.col("rn") <= 20, F.col("n_chars")).otherwise(0))
-            .cast("long")
-            .alias("chars_kept"),
-        )
-        .orderBy("source")
-    )
 
 
 @register(

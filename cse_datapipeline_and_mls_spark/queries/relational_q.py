@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..operators import relational as R
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 # ---------------------------------------------------------------------------
 # TPC-H Q1-style pricing summary — the canonical scan→filter→agg shape.
@@ -406,13 +406,11 @@ def null_nan_audit_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# A3 group-count histogram (reference regression.py:204).
+register_sql(
     "group_histogram_events",
-    oracle="SELECT event_type, count(*) AS n FROM events GROUP BY event_type",
+    "SELECT event_type, count(*) AS n FROM {events} GROUP BY event_type",
 )
-def group_histogram_events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A3 group-count histogram (reference regression.py:204)."""
-    return R.group_count(load_table(spark, sf_dir, "events"), ["event_type"])
 
 
 @register(
@@ -426,34 +424,24 @@ def salted_group_histogram_events(spark: SparkSession, sf_dir: str) -> DataFrame
     return R.salted_group_count(load_table(spark, sf_dir, "events"), "event_type")
 
 
-@register(
+# A8 distinct-set (reference ml_impl.py:197 unique symbols).
+register_sql(
     "distinct_segments",
-    oracle="SELECT DISTINCT c_mktsegment FROM customer",
+    "SELECT DISTINCT c_mktsegment FROM {customer}",
 )
-def distinct_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A8 distinct-set (reference ml_impl.py:197 unique symbols)."""
-    return load_table(spark, sf_dir, "customer").select("c_mktsegment").distinct()
 
 
-@register(
+# A5/A6 global aggregates (reference classifier.py:52 max(date)).
+register_sql(
     "global_minmax_lineitem",
-    oracle="""
+    """
     SELECT min(l_shipdate) AS min_ship, max(l_shipdate) AS max_ship,
            round(min(l_extendedprice), 4) AS min_price,
            round(max(l_extendedprice), 4) AS max_price,
            count(*) AS n
-    FROM lineitem
+    FROM {lineitem}
     """,
 )
-def global_minmax_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """A5/A6 global aggregates (reference classifier.py:52 max(date))."""
-    return load_table(spark, sf_dir, "lineitem").agg(
-        F.min("l_shipdate").alias("min_ship"),
-        F.max("l_shipdate").alias("max_ship"),
-        F.round(F.min("l_extendedprice"), 4).alias("min_price"),
-        F.round(F.max("l_extendedprice"), 4).alias("max_price"),
-        F.count(F.lit(1)).alias("n"),
-    )
 
 
 @register(
@@ -548,35 +536,27 @@ def set_except_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.subtract(s)
 
 
-@register(
+# Grouping-sets family (absent from the reference; SURVEY §2.4 absent
+# list), free via Catalyst's Expand operator.
+register_sql(
     "rollup_returnflag_status",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus,
            round(sum(l_quantity), 4) AS sum_qty, count(*) AS n
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY ROLLUP (l_returnflag, l_linestatus)
     """,
 )
-def rollup_returnflag_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Grouping-sets family (absent from the reference; SURVEY §2.4 absent
-    list — free via Catalyst's Expand operator)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.rollup("l_returnflag", "l_linestatus").agg(
-        F.round(F.sum("l_quantity"), 4).alias("sum_qty"), F.count(F.lit(1)).alias("n")
-    )
 
 
-@register(
+register_sql(
     "cube_priority_status",
-    oracle="""
+    """
     SELECT o_orderpriority, o_orderstatus, count(*) AS n
-    FROM orders
+    FROM {orders}
     GROUP BY CUBE (o_orderpriority, o_orderstatus)
     """,
 )
-def cube_priority_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, sf_dir, "orders")
-    return o.cube("o_orderpriority", "o_orderstatus").agg(F.count(F.lit(1)).alias("n"))
 
 
 @register(
@@ -616,37 +596,23 @@ def class_weights_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).distinct()
 
 
-@register(
+# Explicit GROUPING SETS, the general form of the grouping family.
+# Catalyst compiles it to ONE Expand + hash aggregate: the input is
+# scanned once and each row fans out to its grouping combinations
+# map-side, so the cost is one shuffle of partial aggregates, not one
+# pass per set.
+register_sql(
     "agg_grouping_sets",
-    oracle="""
+    """
     SELECT l_returnflag, l_linestatus,
            CAST(grouping(l_returnflag) AS INT)  AS g_flag,
            CAST(grouping(l_linestatus) AS INT)  AS g_status,
            round(sum(l_extendedprice), 4)       AS sum_price,
            count(*)                             AS n
-    FROM lineitem
+    FROM {lineitem}
     GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
     """,
 )
-def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Explicit GROUPING SETS with grouping() markers — the general form
-    of the grouping family (rollup/cube are its special cases; SURVEY
-    §2.4 absent list). Catalyst compiles it to ONE Expand + hash
-    aggregate: the input is scanned once and each row fans out to its 2-3
-    grouping combinations map-side, so at 100 TB the cost is one shuffle
-    of partial aggregates, not one pass per set."""
-    load_table(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_gs")
-    return spark.sql(
-        """
-        SELECT l_returnflag, l_linestatus,
-               CAST(grouping(l_returnflag) AS INT)  AS g_flag,
-               CAST(grouping(l_linestatus) AS INT)  AS g_status,
-               round(sum(l_extendedprice), 4)       AS sum_price,
-               count(*)                             AS n
-        FROM lineitem_gs
-        GROUP BY GROUPING SETS ((l_returnflag), (l_linestatus), (l_returnflag, l_linestatus))
-        """
-    )
 
 
 @register(

@@ -12,7 +12,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 
 @register(
@@ -157,22 +157,17 @@ def t_threshold_alert(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# T2: idempotent-ingest dedup, one logical snapshot per (key, day) with
+# the day's arrival count (reference scraper/main.py:69-77 skips
+# re-scrapes of the same calendar day).
+register_sql(
     "t_ingest_dedup_daily",
-    oracle="""
+    """
     SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
            min(event_id) AS first_event_id, count(*) AS n_events
-    FROM events GROUP BY 1, 2
+    FROM {events} GROUP BY 1, 2
     """,
 )
-def t_ingest_dedup_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """T2: idempotent-ingest dedup — one logical snapshot per (key, day)
-    with the day's arrival count (reference scraper/main.py:69-77 skips
-    re-scrapes of the same calendar day)."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.groupBy(
-        "user_id", F.to_date(F.date_trunc("day", F.col("ts"))).alias("day")
-    ).agg(F.min("event_id").alias("first_event_id"), F.count(F.lit(1)).alias("n_events"))
 
 
 @register(

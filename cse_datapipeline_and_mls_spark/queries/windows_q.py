@@ -20,7 +20,7 @@ from pyspark.sql import functions as F
 
 from ..operators import tswindow as TS
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 _W_ORACLE = "PARTITION BY user_id ORDER BY ts, event_id"
 
@@ -232,9 +232,10 @@ def w_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
     return df.select("event_id", "user_id", "ts", F.round("v", 6).alias("v_filled"))
 
 
-@register(
+# Ranking family (absent from the reference; SURVEY §2.5 absent list).
+register_sql(
     "w_rank_family",
-    oracle=f"""
+    """
     SELECT event_id, event_type,
            row_number() OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS row_number,
            rank()       OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS rank,
@@ -242,48 +243,20 @@ def w_forward_fill(spark: SparkSession, sf_dir: str) -> DataFrame:
            ntile(4)     OVER (PARTITION BY event_type ORDER BY value DESC, event_id) AS ntile_4,
            round(percent_rank() OVER (PARTITION BY event_type ORDER BY value DESC, event_id), 6) AS pct_rank,
            round(cume_dist()    OVER (PARTITION BY event_type ORDER BY value DESC, event_id), 6) AS cume
-    FROM events
+    FROM {events}
     """,
 )
-def w_rank_family(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Ranking family — absent from the reference (SURVEY §2.5 absent
-    list), exposed as first-class features."""
-    ev = _events_series(spark, sf_dir)
-    w = TS.series_window("event_type", [F.desc("value"), F.asc("event_id")])
-    return ev.select(
-        "event_id",
-        "event_type",
-        F.row_number().over(w).alias("row_number"),
-        F.rank().over(w).alias("rank"),
-        F.dense_rank().over(w).alias("dense_rank"),
-        F.ntile(4).over(w).alias("ntile_4"),
-        F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
-        F.round(F.cume_dist().over(w), 6).alias("cume"),
-    )
 
 
-@register(
+register_sql(
     "w_running_total",
-    oracle=f"""
+    f"""
     SELECT event_id, user_id, ts,
            round(sum(value) OVER ({_W_ORACLE} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW), 4) AS running_value,
            count(*) OVER ({_W_ORACLE} ROWS BETWEEN UNBOUNDED PRECEDING AND CURRENT ROW) AS n_so_far
-    FROM events
+    FROM {{events}}
     """,
 )
-def w_running_total(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Running aggregates over unbounded-preceding frames."""
-    ev = _events_series(spark, sf_dir)
-    from pyspark.sql import Window
-
-    w = TS.series_window("user_id", ["ts", "event_id"]).rowsBetween(Window.unboundedPreceding, 0)
-    return ev.select(
-        "event_id",
-        "user_id",
-        "ts",
-        F.round(F.sum("value").over(w), 4).alias("running_value"),
-        F.count(F.lit(1)).over(w).alias("n_so_far"),
-    )
 
 
 @register(
@@ -1299,13 +1272,17 @@ def w_obv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Autocorrelation at lags 1-3 of each series' daily mean, the
+# stationarity diagnostic read before fitting a forecaster. The daily
+# mean is q6-quantized BEFORE the correlations (group-sum order differs
+# between engines), and the order-sensitive corr outputs are q6'd.
+register_sql(
     "w_autocorrelation",
-    oracle=f"""
+    f"""
     WITH d AS (
       SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
              floor(avg(value) {_Q6} AS v
-      FROM events GROUP BY 1, 2
+      FROM {{events}} GROUP BY 1, 2
     ), l AS (
       SELECT user_id, v,
              lag(v, 1) OVER (PARTITION BY user_id ORDER BY day) AS v1,
@@ -1321,48 +1298,6 @@ def w_obv_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM l GROUP BY user_id ORDER BY user_id
     """,
 )
-def w_autocorrelation(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Autocorrelation function at lags 1–3 of each series' daily-mean
-    value — the stationarity/seasonality diagnostic read before
-    fitting any forecaster (the reference fits lag-feature regressors;
-    ACF is what says which lags carry signal). Lag-k autocorrelation
-    here is the Pearson correlation between the daily series and its
-    k-shifted self over the overlapping days (corr skips the NULL
-    warmup rows identically in both engines).
-
-    Numeric discipline: the daily mean is q6-quantized BEFORE the
-    correlations (group-sum order differs between engines; both sides
-    must correlate identical doubles), and the corr outputs — merged
-    co-moments, order-sensitive — are q6'd. Plan: one (user, day)
-    aggregation, one series-keyed window pass for all three lags, one
-    user-keyed agg — day frames are tiny relative to ticks."""
-    from ..operators.numeric import q6
-
-    ev = _events_series(spark, sf_dir)
-    d = (
-        ev.groupBy(
-            "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
-        ).agg(q6(F.avg("value")).alias("v"))
-    )
-    w = Window.partitionBy("user_id").orderBy("day")
-    lagged = d.select(
-        "user_id",
-        "v",
-        F.lag("v", 1).over(w).alias("v1"),
-        F.lag("v", 2).over(w).alias("v2"),
-        F.lag("v", 3).over(w).alias("v3"),
-    )
-    return (
-        lagged.groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).cast("long").alias("n_days"),
-            q6(F.corr("v", "v1")).alias("ac1"),
-            q6(F.corr("v", "v2")).alias("ac2"),
-            q6(F.corr("v", "v3")).alias("ac3"),
-        )
-        .withColumn("user_id", F.col("user_id").cast("long"))
-        .orderBy("user_id")
-    )
 
 
 # Wilder's smoothing constant 1/14 expressed through the shared EMA
@@ -1951,13 +1886,17 @@ def w_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Partial autocorrelations at lags 1-3 via the Durbin-Levinson closed
+# form, unrolled into 1-row-per-user float expressions over the q6'd
+# autocorrelations; with w_autocorrelation (ACF) and w_ljung_box it
+# completes the Box-Jenkins identification trio.
+register_sql(
     "w_pacf",
-    oracle=f"""
+    f"""
     WITH d AS (
       SELECT user_id, CAST(date_trunc('day', ts) AS DATE) AS day,
              floor(avg(value) {_Q6} AS v
-      FROM events GROUP BY 1, 2
+      FROM {{events}} GROUP BY 1, 2
     ), l AS (
       SELECT user_id, v,
              lag(v, 1) OVER (PARTITION BY user_id ORDER BY day) AS v1,
@@ -1984,66 +1923,6 @@ def w_ljung_box(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM p3 ORDER BY user_id
     """,
 )
-def w_pacf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Partial autocorrelations at lags 1–3 of each series' daily-mean
-    value via the Durbin–Levinson closed form (φ₁₁ = ρ₁;
-    φ₂₂ = (ρ₂−ρ₁²)/(1−ρ₁²); φ₃₃ from the order-2 coefficients) —
-    completing the Box–Jenkins identification trio with
-    w_autocorrelation (ACF) and w_ljung_box: ACF tails off + PACF cuts
-    at p ⇒ AR(p), the read that picks the lag features the reference's
-    regressors consume. No matrix solve, no iteration — the recursion
-    is unrolled into three 1-row-per-user float expressions over the
-    q6'd autocorrelations, mirrored exactly in SQL.
-
-    Plan: identical to the ACF query — one (user, day) agg, one
-    series-keyed window pass, one user-keyed corr fold, then pure
-    arithmetic."""
-    from ..operators.numeric import q6
-
-    ev = _events_series(spark, sf_dir)
-    d = ev.groupBy(
-        "user_id", F.date_trunc("day", "ts").cast("date").alias("day")
-    ).agg(q6(F.avg("value")).alias("v"))
-    w = Window.partitionBy("user_id").orderBy("day")
-    lagged = d.select(
-        "user_id",
-        "v",
-        F.lag("v", 1).over(w).alias("v1"),
-        F.lag("v", 2).over(w).alias("v2"),
-        F.lag("v", 3).over(w).alias("v3"),
-    )
-    a = lagged.groupBy("user_id").agg(
-        F.count(F.lit(1)).cast("long").alias("n_days"),
-        q6(F.corr("v", "v1")).alias("r1"),
-        q6(F.corr("v", "v2")).alias("r2"),
-        q6(F.corr("v", "v3")).alias("r3"),
-    )
-    phi22 = (F.col("r2") - F.col("r1") * F.col("r1")) / (
-        1 - F.col("r1") * F.col("r1")
-    )
-    p2 = a.withColumn("phi22", phi22)
-    p3 = p2.withColumn("phi21", F.col("r1") * (1 - F.col("phi22")))
-    return (
-        p3.select(
-            F.col("user_id").cast("long").alias("user_id"),
-            "n_days",
-            q6(F.col("r1")).alias("pacf1"),
-            q6(F.col("phi22")).alias("pacf2"),
-            q6(
-                (
-                    F.col("r3")
-                    - F.col("phi21") * F.col("r2")
-                    - F.col("phi22") * F.col("r1")
-                )
-                / (
-                    1
-                    - F.col("phi21") * F.col("r1")
-                    - F.col("phi22") * F.col("r2")
-                )
-            ).alias("pacf3"),
-        )
-        .orderBy("user_id")
-    )
 
 
 @register(

@@ -23,6 +23,7 @@ the config profile:
 from __future__ import annotations
 
 import os
+import sys
 
 from pyspark.sql import SparkSession
 
@@ -65,10 +66,16 @@ def get_spark(
             # can desync results from the committed baseline); note that
             # getOrCreate reuses any live session, in which case builder
             # configs — env overrides included — do not take effect.
-            print(f"[session] SPARK_GRAFT_CONF override: {k.strip()}={v.strip()}")
+            print(
+                f"[session] SPARK_GRAFT_CONF override: {k.strip()}={v.strip()}",
+                file=sys.stderr,
+            )
             builder = builder.config(k.strip(), v.strip())
         else:
-            print(f"[session] SPARK_GRAFT_CONF entry malformed (need k=v): {kv!r}")
+            print(
+                f"[session] SPARK_GRAFT_CONF entry malformed (need k=v): {kv!r}",
+                file=sys.stderr,
+            )
     for k, v in (extra_conf or {}).items():
         builder = builder.config(k, v)
     spark = builder.getOrCreate()

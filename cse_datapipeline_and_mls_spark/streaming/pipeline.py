@@ -620,7 +620,8 @@ def prepare_erasure_store(
     # directories; run them from a small driver pool (guide §2.6) so
     # each write's tail (a `buckets`-task stage that leaves most cores
     # idle) back-fills with the next table's tasks. Job descriptions
-    # are thread-local, so each stays labelled. Measured at sf0.1/16
+    # are thread-local in PySpark's pinned-thread mode (the default), so
+    # each stays labelled. Measured at sf0.1/16
     # buckets: the build phase of x_erasure_store_dsar_batch overlaps
     # 3 sequential 16-task writes on 32 cores.
     from concurrent.futures import ThreadPoolExecutor
@@ -1039,7 +1040,8 @@ def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> 
     # r15 — the same driver-pool pattern as prepare_erasure_store, which
     # is what VERDICT r14 #4 prescribed; events is independent of the
     # orders→lineitem cascade). orders still rewrites strictly last.
-    # Job descriptions are thread-local, so each rewrite stays labelled.
+    # Job descriptions are thread-local in PySpark's pinned-thread mode
+    # (the default), so each rewrite stays labelled.
     kept = {}
     if partitioned:
 

@@ -24,10 +24,11 @@ Run:  python examples/landed_html_scrape.py
 
 from __future__ import annotations
 
+import os
 import sys
 from html.parser import HTMLParser
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

@@ -27,10 +27,11 @@ the network is absent):
 from __future__ import annotations
 
 import json
+import os
 import sys
 from typing import Callable, Iterable
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, SparkSession  # noqa: E402
 from pyspark.sql import functions as F  # noqa: E402

@@ -13,13 +13,14 @@
 from __future__ import annotations
 
 import inspect
+import os
 
 import pytest
 from pyspark.sql import functions as F
 
 
 def test_round_close_docstring_not_hardcoded():
-    src = open("/root/repo/tools/round_close.py").read()
+    src = open(os.path.join(os.path.dirname(__file__), "..", "tools", "round_close.py")).read()
     assert "341-for-341" not in src
     assert "347-for-347" not in src  # don't trade one stale pin for another
 

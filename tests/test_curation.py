@@ -122,11 +122,9 @@ class TestCurationQueries:
         assert rows["url/b"].n_kept == 0 and rows["url/b"].n_dropped == 1
 
     def test_domain_cap_caps_at_20(self, spark, sf_dir):
-        from cse_datapipeline_and_mls_spark.queries.curation_q import (
-            x_domain_cap_documents,
-        )
+        from cse_datapipeline_and_mls_spark.queries import QUERIES
 
-        rows = x_domain_cap_documents(spark, sf_dir).collect()
+        rows = QUERIES["x_domain_cap_documents"](spark, sf_dir).collect()
         assert rows, "expected at least one source"
         for r in rows:
             assert r.n_kept <= 20

@@ -160,7 +160,7 @@ def test_pagerank_from_bucketed_edges_skips_the_edge_shuffle(spark):
     # LogicalRDD forgets its partitioning; on this tiny graph the
     # planner broadcasts the state, leaving 1 — strictly fewer than
     # checkpoint either way
-    assert G._LAST_ITER_EXCHANGES <= 2
+    assert G._LAST_ITER_EXCHANGES == 1
     assert G._LAST_ITER_EXCHANGES < ckpt_iter_exchanges
     assert all(abs(plain[k] - persisted[k]) < 1e-12 for k in plain)
 
@@ -176,7 +176,7 @@ def test_pagerank_from_bucketed_edges_skips_the_edge_shuffle(spark):
         assert G._LAST_EDGE_EXCHANGES == 0  # no ingest-side shuffle at all
         # bucket hash survives the cache: same reduced exchange count as
         # the persisted in-session path
-        assert G._LAST_ITER_EXCHANGES <= 2
+        assert G._LAST_ITER_EXCHANGES == 1
         assert G._LAST_ITER_EXCHANGES < ckpt_iter_exchanges
     finally:
         spark.sql("DROP TABLE IF EXISTS t_pr_edges_b")

@@ -8,9 +8,10 @@ registry-level preconditions.)"""
 
 from __future__ import annotations
 
+import os
 import sys
 
-sys.path.insert(0, "/root/repo")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 
 def test_static_oracle_lint_is_clean():

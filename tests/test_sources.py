@@ -4,6 +4,7 @@ flatten): CSV with explicit schema + sanitizer, RTDB-snapshot JSON."""
 from __future__ import annotations
 
 import json
+import os
 
 from pyspark.sql import types as T
 
@@ -82,7 +83,7 @@ def test_landed_http_ingest_example(spark):
     an injected transport."""
     import sys
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "examples"))
     import landed_http_ingest as ex
 
     landed = ex.land_http_json(spark, ex.fetch_json(None))
@@ -130,7 +131,7 @@ def test_landed_html_scrape_example(spark):
 
     import pytest as _pytest
 
-    sys.path.insert(0, "/root/repo/examples")
+    sys.path.insert(0, os.path.join(os.path.dirname(__file__), "..", "examples"))
     import landed_html_scrape as ex
 
     header, rows = ex.fetch_trade_summary()
@@ -225,7 +226,6 @@ def test_example_tours_importable():
     """Examples are documentation that must not rot: every tour module
     imports cleanly (main() is exercised manually / by the quickstart)."""
     import importlib.util
-    import os
 
     root = os.path.join(os.path.dirname(os.path.dirname(__file__)), "examples")
     for name in (

@@ -6,7 +6,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from cse_datapipeline_and_mls_spark.queries import QUERIES
+from cse_datapipeline_and_mls_spark.queries import ORACLE, QUERIES, SQL_BODIED
 from cse_datapipeline_and_mls_spark.sources import load_table, register_views
 
 
@@ -49,3 +49,26 @@ def test_sql_window_matches_dataframe(spark, sf_dir):
         for r in ev.select("event_id", F.row_number().over(w).alias("rn")).collect()
     }
     assert got == want
+
+
+def test_sql_bodied_rows_leave_no_session_state(spark, sf_dir):
+    """register_sql rows run their one SQL text over temp views that
+    spark.sql's formatter drops before returning: no view, no conf
+    change and no unfilled {table} placeholder may outlive a row.
+    agg_grouping_sets is the row that used to leave a session-wide view
+    behind."""
+    assert "agg_grouping_sets" in SQL_BODIED
+    # load_table sets the nanos-as-long parquet conf session-wide on every
+    # call (ROADMAP item 3); set it first so the comparison below sees only
+    # what each row itself changes
+    load_table(spark, sf_dir, "events")
+
+    def temp_views():
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    for name in sorted(SQL_BODIED):
+        assert "{" not in ORACLE[name] and "}" not in ORACLE[name], name
+        views, conf = temp_views(), spark.conf.getAll
+        QUERIES[name](spark, sf_dir).collect()
+        assert temp_views() == views, name
+        assert spark.conf.getAll == conf, name

@@ -490,13 +490,13 @@ def test_pacf_matches_statsmodels_free_recursion(spark, sf_dir):
     directly (no shared closed-form code with the engine)."""
     import numpy as np
 
-    from cse_datapipeline_and_mls_spark.queries.windows_q import w_pacf
+    from cse_datapipeline_and_mls_spark.queries import QUERIES
 
     pdf = _events_pdf(sf_dir)
     pdf["day"] = pdf["ts"].dt.floor("D")
     d = pdf.groupby(["user_id", "day"])["value"].mean().reset_index()
     d["v"] = np.floor(d["value"] * 1e6 + 0.5) / 1e6
-    rows = {r["user_id"]: r for r in w_pacf(spark, sf_dir).collect()}
+    rows = {r["user_id"]: r for r in QUERIES["w_pacf"](spark, sf_dir).collect()}
     for uid, g in d.groupby("user_id"):
         v = g.sort_values("day")["v"].to_numpy()
         rho = [
