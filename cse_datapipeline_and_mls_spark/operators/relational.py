@@ -57,13 +57,6 @@ def group_count(df: DataFrame, keys: Sequence[str], out: str = "n") -> DataFrame
     return df.groupBy(*keys).agg(F.count(F.lit(1)).alias(out))
 
 
-def group_count_map(df: DataFrame, key: str) -> dict:
-    """Driver-side {key: count} map for e.g. class weights (reference
-    classifier.py:62-63 used .rdd.collectAsMap(); DataFrame-native here).
-    Only valid for low-cardinality keys — the result lands on the driver."""
-    return {r[key]: r["n"] for r in group_count(df, [key]).collect()}
-
-
 def salted_group_count(df: DataFrame, key: str, salt_buckets: int = 32, out: str = "n") -> DataFrame:
     """Two-stage skew-resistant count: salt the key, partial-count, unsalt,
     final-sum. Same result as ``group_count`` — use when one key holds an

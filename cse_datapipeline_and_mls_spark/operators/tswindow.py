@@ -241,20 +241,12 @@ def with_ema(
     return d.withColumn(out, num / den).drop("_g", "_pos", "_blk", "_v", "_vrun", "_vtot")
 
 
-# -- W7: momentum / ratio-to-lag --------------------------------------------
+# -- W7: momentum -----------------------------------------------------------
 
 
 def with_momentum(df: DataFrame, col: str, w: WindowSpec, k: int, out: str) -> DataFrame:
     """momentum_k = x − lag_k(x) (reference regression.py:88, classifier.py:34)."""
     return df.withColumn(out, F.col(col) - F.lag(col, k).over(w))
-
-
-def with_pct_change_k(df: DataFrame, col: str, w: WindowSpec, k: int, out: str) -> DataFrame:
-    """(x − lag_k)/lag_k (reference classifier.py:36 PRICE_CHANGE_3D,
-    ml_impl.py:81-82). NULL when the lag is NULL or 0 (Spark /0 → NULL,
-    matching the oracle's NULLIF guard)."""
-    lagk = F.lag(col, k).over(w)
-    return df.withColumn(out, (F.col(col) - lagk) / F.nullif(lagk, F.lit(0)))
 
 
 # -- W9: volume features ----------------------------------------------------
@@ -341,17 +333,6 @@ def with_anomaly_flag(
         F.when(F.abs(F.coalesce(F.col(z_out), F.lit(0.0))) > threshold, "Anomaly").otherwise(
             "Normal"
         ),
-    )
-
-
-# -- ranking family (absent from the reference; exposed per SURVEY §2.5) ----
-
-
-def with_rank_features(df: DataFrame, w: WindowSpec, prefix: str = "") -> DataFrame:
-    return (
-        df.withColumn(f"{prefix}row_number", F.row_number().over(w))
-        .withColumn(f"{prefix}rank", F.rank().over(w))
-        .withColumn(f"{prefix}dense_rank", F.dense_rank().over(w))
     )
 
 

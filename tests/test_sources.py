@@ -271,3 +271,138 @@ def test_read_jsonl_with_quarantine_splits_bad_lines(spark, tmp_path_factory):
     assert bad == sorted(['this is not json at all', '{"id": 3, "v": }'])
     # schema contract: the corrupt column never leaks into good rows
     assert good.columns == ["id", "v"]
+
+
+def _jobs_started(spark, group, fn):
+    """Run ``fn`` under a job group; return its result and the number of
+    Spark jobs it started (counted once the listener bus has delivered
+    their start events)."""
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return out, len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_load_table_infers_each_file_once(spark, sf_dir, tmp_path):
+    """A repeat load of the same file reads with the memoized schema and
+    runs no Spark job; a rewritten file is a new identity and is inferred
+    again, so a column it gained shows up."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from cse_datapipeline_and_mls_spark.sources import load_table
+
+    shutil.copy(os.path.join(sf_dir, "customer.parquet"), tmp_path / "customer.parquet")
+    first = load_table(spark, str(tmp_path), "customer")
+    again, n_jobs = _jobs_started(
+        spark, "test_sources.reload", lambda: load_table(spark, str(tmp_path), "customer")
+    )
+    assert n_jobs == 0
+    assert again.schema == first.schema
+    assert sorted(again.collect()) == sorted(first.collect())
+
+    path = tmp_path / "orders.parquet"
+    pq.write_table(pa.table({"o_orderkey": [1, 2]}), path)
+    assert load_table(spark, str(tmp_path), "orders").columns == ["o_orderkey"]
+    pq.write_table(pa.table({"o_orderkey": [1, 2], "o_custkey": [7, 8]}), path)
+    grown = load_table(spark, str(tmp_path), "orders")
+    assert grown.columns == ["o_orderkey", "o_custkey"]
+    assert sorted(r["o_custkey"] for r in grown.collect()) == [7, 8]
+
+
+def test_load_table_nanos_conf_scoped_to_inference(spark, tmp_path):
+    """A TIMESTAMP(NANOS) events file loads as microsecond timestamps on
+    both the inferring load and the memoized one, and neither leaves the
+    nanos-as-long conf changed in the session."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from cse_datapipeline_and_mls_spark.sources import load_table
+
+    ns = [1_700_000_000_123_456_789, 1_700_000_060_000_000_999]
+    pq.write_table(
+        pa.table(
+            {"event_id": pa.array([1, 2], pa.int64()), "ts": pa.array(ns, pa.timestamp("ns"))}
+        ),
+        tmp_path / "events.parquet",
+        version="2.6",
+    )
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    for _ in ("miss", "hit"):
+        ev = load_table(spark, str(tmp_path), "events")
+        assert dict(ev.dtypes)["ts"] == "timestamp"
+        got = ev.select("event_id", F.unix_micros("ts").alias("us")).orderBy("event_id")
+        assert [r["us"] for r in got.collect()] == [v // 1000 for v in ns]
+        assert spark.conf.get(key, None) is None
+
+
+def test_load_table_concurrent_inference_keeps_conf(spark, tmp_path):
+    """Loads inferring different nanos files from more threads than cores
+    all see the nanos conf during their inference, and the session conf
+    is unset again once all have finished."""
+    import sys
+    import threading
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql import functions as F
+
+    from cse_datapipeline_and_mls_spark.sources import load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    spark.conf.unset(key)
+    dirs = []
+    for i in range(8):
+        d = tmp_path / f"d{i}"
+        d.mkdir()
+        pq.write_table(
+            pa.table({"ts": pa.array([1_000 * (i + 1) + 7], pa.timestamp("ns"))}),
+            d / "events.parquet",
+            version="2.6",
+        )
+        dirs.append(str(d))
+    got, errors = {}, []
+
+    def load(d):
+        try:
+            got[d] = load_table(spark, d, "events").select(F.unix_micros("ts")).first()[0]
+        except Exception as e:  # reported by the assertion below
+            errors.append(e)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-5)
+    try:
+        threads = [threading.Thread(target=load, args=(d,)) for d in dirs]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert errors == []
+    assert got == {d: i + 1 for i, d in enumerate(dirs)}
+    assert spark.conf.get(key, None) is None
+
+
+def test_session_turns_off_dataframe_call_site_capture(spark):
+    """The engine's session skips PySpark's per-call call-site capture;
+    DataFrame errors still carry their error condition."""
+    import pytest
+    from pyspark.errors import ArithmeticException
+    from pyspark.errors.utils import is_debugging_enabled
+    from pyspark.sql import functions as F
+
+    assert spark.conf.get("spark.python.sql.dataFrameDebugging.enabled") == "false"
+    assert not is_debugging_enabled()
+    with pytest.raises(ArithmeticException) as err:
+        spark.range(1).select(F.lit(1) / F.lit(0)).collect()
+    assert err.value.getCondition() == "DIVIDE_BY_ZERO"

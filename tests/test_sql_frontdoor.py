@@ -58,10 +58,6 @@ def test_sql_bodied_rows_leave_no_session_state(spark, sf_dir):
     agg_grouping_sets is the row that used to leave a session-wide view
     behind."""
     assert "agg_grouping_sets" in SQL_BODIED
-    # load_table sets the nanos-as-long parquet conf session-wide on every
-    # call (ROADMAP item 3); set it first so the comparison below sees only
-    # what each row itself changes
-    load_table(spark, sf_dir, "events")
 
     def temp_views():
         return {t.name for t in spark.catalog.listTables() if t.isTemporary}
