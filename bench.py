@@ -298,8 +298,11 @@ def _production_legs():
     # leg times ONLY the refresh a production job runs per batch
     # (queries/ml_q.py refresh_item_neighbors), with the persisted
     # corpus state built once per sf_dir OUTSIDE the timer (production
-    # reads that state, it does not rebuild it).
+    # reads that state, it does not rebuild it). The state's checkpoints
+    # are released by ``item_recs_refresh.release()`` once the leg's
+    # timed runs end.
     _ir_state: dict = {}
+    _ir_pinned: list = []
 
     def item_recs_refresh(spark, sf_dir):
         from pyspark import StorageLevel
@@ -309,9 +312,12 @@ def _production_legs():
         st = _ir_state.get(sf_dir)
         if st is None:
             li, corpus_o, delta_o = ml_q.split_orders_at_watermark(spark, sf_dir)
-            ck = lambda df: df.localCheckpoint(  # noqa: E731
-                eager=True, storageLevel=StorageLevel.DISK_ONLY
-            )
+
+            def ck(df):
+                df = df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+                _ir_pinned.append(df)
+                return df
+
             corpus_o, delta_o = ck(corpus_o), ck(delta_o)
             corpus_pairs = ck(ml_q.pair_counts(li, corpus_o))
             _ir_state[sf_dir] = st = (
@@ -330,6 +336,16 @@ def _production_legs():
                 F.lit(0).cast("long").alias("co"),
             )
         )
+
+    def _release_ir_state():
+        # a local checkpoint's blocks belong to the RDD under its
+        # LogicalRDD plan; DataFrame.unpersist() does not reach them
+        for df in _ir_pinned:
+            df._jdf.queryExecution().analyzed().rdd().unpersist(True)
+        _ir_pinned.clear()
+        _ir_state.clear()
+
+    item_recs_refresh.release = _release_ir_state
 
     # The triangle family's headline rows measure the amortized
     # (memoized) path — the right production posture, but the
@@ -459,6 +475,8 @@ def main() -> None:
                 fn(spark, sf_dir).write.format("noop").mode("overwrite").save()
                 best = min(best, time.time() - t0)
             production[name] = round(best, 3)
+            # a leg that pins state across its runs releases it here
+            getattr(fn, "release", lambda: None)()
 
     sentinel_last = _sentinel_run()
     sentinel = {

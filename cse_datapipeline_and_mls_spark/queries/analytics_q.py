@@ -2449,6 +2449,8 @@ register_sql(
 )
 
 
+# Stays DataFrame-bodied: its SQL text plans 11 shuffles against this
+# form's 6.
 @register(
     "agg_kendall_tau_b",
     oracle="""

@@ -146,25 +146,18 @@ register_sql(
 )
 
 
-@register(
+# Distinct aggregation (absent from the reference, SURVEY §2.4 absent
+# list). Catalyst plans multi-distinct via Expand — one pass.
+register_sql(
     "agg_distinct_counts",
-    oracle="""
+    """
     SELECT l_returnflag,
            count(DISTINCT l_partkey) AS n_parts,
            count(DISTINCT l_suppkey) AS n_supps,
            count(*) AS n_rows
-    FROM lineitem GROUP BY l_returnflag
+    FROM {lineitem} GROUP BY l_returnflag
     """,
 )
-def agg_distinct_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Distinct aggregation (absent from the reference, SURVEY §2.4
-    absent list). Catalyst plans multi-distinct via Expand — one pass."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.groupBy("l_returnflag").agg(
-        F.countDistinct("l_partkey").alias("n_parts"),
-        F.countDistinct("l_suppkey").alias("n_supps"),
-        F.count(F.lit(1)).alias("n_rows"),
-    )
 
 
 @register(
@@ -190,6 +183,8 @@ def agg_percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stays DataFrame-bodied: its SQL text ran ~1.6x slower at sf0.1 in an
+# interleaved A/B (0.21 -> 0.34 s).
 @register(
     "agg_max_by",
     oracle="""
@@ -241,6 +236,9 @@ def x_word_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stays DataFrame-bodied: the SQL text's three-scan UNION ALL ran
+# 1.13x slower than this one-scan stack() (median of 14 interleaved
+# A/B pairs).
 @register(
     "unpivot_lineitem_measures",
     oracle="""
@@ -365,6 +363,8 @@ def agg_collect_sorted_list(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stays DataFrame-bodied: its oracle asserts the HLL verdict as a
+# constant TRUE, which the SQL text would skip computing.
 @register(
     "agg_approx_distinct",
     oracle="""
@@ -560,65 +560,37 @@ def agg_robust_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     return robust_outlier_stats(li, "l_extendedprice", ["l_returnflag"], z_cut=3.5)
 
 
-@register(
+# TPC-H Q17 shape: a correlated scalar subquery (per-part avg quantity),
+# which Catalyst decorrelates into an aggregate + join on l_partkey.
+register_sql(
     "tpch_q17_small_quantity_revenue",
-    oracle="""
+    """
     SELECT round(sum(l.l_extendedprice) / 7.0, 4) AS avg_yearly
-    FROM lineitem l
+    FROM {lineitem} l
     JOIN (SELECT l_partkey, 0.2 * avg(l_quantity) AS qty_limit
-          FROM lineitem GROUP BY l_partkey) t
+          FROM {lineitem} GROUP BY l_partkey) t
       ON l.l_partkey = t.l_partkey
     WHERE l.l_quantity < t.qty_limit
     """,
 )
-def tpch_q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q17 shape: correlated scalar subquery (per-part avg
-    quantity) decorrelated into an aggregate + self-join — exactly how
-    Catalyst rewrites it. Both sides hash-partition on l_partkey; the agg
-    side is one narrow row per part, broadcast when it fits."""
-    li = load_table(spark, sf_dir, "lineitem")
-    limits = li.groupBy(F.col("l_partkey").alias("p_key")).agg(
-        (F.avg("l_quantity") * 0.2).alias("qty_limit")
-    )
-    joined = li.join(limits, li.l_partkey == limits.p_key).filter(
-        F.col("l_quantity") < F.col("qty_limit")
-    )
-    return joined.agg(F.round(F.sum("l_extendedprice") / 7.0, 4).alias("avg_yearly"))
 
 
-@register(
+# TPC-H Q4 shape: correlated EXISTS → left-semi join with an equi key and
+# an inequality residual. No l_commitdate/l_receiptdate here, so "late" =
+# shipped >90 days after the order date.
+register_sql(
     "tpch_q4_order_priority_exists",
-    oracle="""
+    """
     SELECT o_orderpriority, count(*) AS order_count
-    FROM orders o
+    FROM {orders} o
     WHERE o.o_orderdate >= TIMESTAMP '1996-07-01'
       AND o.o_orderdate < TIMESTAMP '1996-10-01'
-      AND EXISTS (SELECT 1 FROM lineitem l
+      AND EXISTS (SELECT 1 FROM {lineitem} l
                   WHERE l.l_orderkey = o.o_orderkey
                     AND l.l_shipdate > o.o_orderdate + INTERVAL 90 DAY)
     GROUP BY o_orderpriority
     """,
 )
-def tpch_q4_order_priority_exists(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q4 shape: correlated EXISTS → left-semi join with a
-    compound (equi + inequality) condition; this data has no
-    l_commitdate/l_receiptdate, so "late" = shipped >90 days after the
-    order date. The equi key still drives the hash partitioning; the
-    inequality is evaluated as the join residual."""
-    o = load_table(spark, sf_dir, "orders")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_shipdate")
-    o = o.filter(
-        (F.col("o_orderdate") >= F.lit("1996-07-01").cast("timestamp"))
-        & (F.col("o_orderdate") < F.lit("1996-10-01").cast("timestamp"))
-    )
-    cond = (o.o_orderkey == li.l_orderkey) & (
-        li.l_shipdate > o.o_orderdate + F.expr("INTERVAL 90 DAYS")
-    )
-    return (
-        o.join(li, on=cond, how="left_semi")
-        .groupBy("o_orderpriority")
-        .agg(F.count(F.lit(1)).alias("order_count"))
-    )
 
 
 @register(
@@ -673,36 +645,24 @@ register_sql(
 )
 
 
-@register(
+# first/last/nth value over the full partition (SURVEY §2.5 absent
+# list — ranking/value family exposed).
+register_sql(
     "w_first_last_nth",
-    oracle="""
+    """
     SELECT event_id, user_id,
            round(first_value(value) OVER w, 6) AS first_v,
            round(last_value(value)  OVER w, 6) AS last_v,
            round(nth_value(value, 3) OVER w, 6) AS third_v
-    FROM events
+    FROM {events}
     WINDOW w AS (PARTITION BY user_id ORDER BY ts, event_id
                  ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
     """,
 )
-def w_first_last_nth(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """first/last/nth value over the full partition (SURVEY §2.5 absent
-    list — ranking/value family exposed)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = (
-        Window.partitionBy("user_id")
-        .orderBy("ts", "event_id")
-        .rowsBetween(Window.unboundedPreceding, Window.unboundedFollowing)
-    )
-    return ev.select(
-        "event_id",
-        "user_id",
-        F.round(F.first("value").over(w), 6).alias("first_v"),
-        F.round(F.last("value").over(w), 6).alias("last_v"),
-        F.round(F.nth_value("value", 3).over(w), 6).alias("third_v"),
-    )
 
 
+# Stays DataFrame-bodied: its SQL text ran ~3.7x slower at sf0.1; it
+# lacks the r14 string min/max split below.
 @register(
     "profile_lineitem",
     oracle="""
@@ -990,6 +950,8 @@ def j_fuzzy_part_names(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stays DataFrame-bodied: its SQL text ran 1.02x slower (median of 14
+# interleaved A/B pairs).
 @register(
     "agg_width_bucket_histogram",
     oracle="""
@@ -1045,14 +1007,20 @@ register_sql(
 )
 
 
-@register(
+# Slowly-changing-dimension type-2 history from an event log:
+# consecutive duplicate values compress away (lag filter), survivors
+# become versioned validity intervals [valid_from, valid_to) via lead.
+# Both windows share one partition spec (one shuffle on user_id) and
+# order by (ts, event_id), so same-timestamp changes get engine-independent
+# version numbers (ADVICE r3).
+register_sql(
     "w_scd2_value_history",
-    oracle="""
+    """
     WITH chg AS (
       SELECT user_id, ts, event_id, value
       FROM (SELECT user_id, ts, event_id, value,
                    lag(value) OVER (PARTITION BY user_id ORDER BY ts, event_id) AS prev_v
-            FROM events) t
+            FROM {events}) t
       WHERE prev_v IS NULL OR value <> prev_v
     )
     SELECT user_id,
@@ -1064,34 +1032,6 @@ register_sql(
     FROM chg
     """,
 )
-def w_scd2_value_history(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Slowly-changing-dimension type-2 history built from an event log:
-    consecutive-duplicate values compress away (lag filter), survivors
-    become versioned validity intervals [valid_from, valid_to) via lead,
-    open-ended interval = current row. Two windows over ONE partition
-    spec — Catalyst collapses them into a single sort+shuffle on
-    user_id; at 100 TB this is the standard merge-into-history shape
-    (partition the history table by key hash, cluster by valid_from).
-
-    Both windows order by (ts, event_id) — two surviving value-changes
-    at the same timestamp would otherwise get engine-dependent version
-    numbers and interval bounds (ADVICE r3)."""
-    ev = load_table(spark, sf_dir, "events")
-    w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    chg = (
-        ev.select("user_id", "ts", "event_id", "value")
-        .withColumn("_prev", F.lag("value").over(w))
-        .filter(F.col("_prev").isNull() | (F.col("value") != F.col("_prev")))
-    )
-    w2 = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    return chg.select(
-        "user_id",
-        F.row_number().over(w2).cast("long").alias("version"),
-        F.col("ts").alias("valid_from"),
-        F.lead("ts").over(w2).alias("valid_to"),
-        "value",
-        F.lead("ts").over(w2).isNull().alias("is_current"),
-    )
 
 
 @register(
@@ -1721,20 +1661,26 @@ def x_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Strict-order 3-step funnel (signup → first click AFTER signup → first
+# purchase AFTER that click), the generalization of the 2-step
+# t_click_to_buy_conversion. Three stage aggregates + two stage joins, all
+# keyed on user_id, so a user_id-bucketed events table runs it
+# exchange-free. Strictly-after (ts >, not >=) pins tie behavior across
+# engines.
+register_sql(
     "t_funnel_3step",
-    oracle="""
+    """
     WITH s1 AS (
       SELECT user_id, min(ts) AS t_signup
-      FROM events WHERE event_type = 'signup' GROUP BY user_id
+      FROM {events} WHERE event_type = 'signup' GROUP BY user_id
     ), s2 AS (
       SELECT e.user_id, min(e.ts) AS t_click
-      FROM events e JOIN s1 ON e.user_id = s1.user_id
+      FROM {events} e JOIN s1 ON e.user_id = s1.user_id
       WHERE e.event_type = 'click' AND e.ts > s1.t_signup
       GROUP BY e.user_id
     ), s3 AS (
       SELECT e.user_id, min(e.ts) AS t_purchase
-      FROM events e JOIN s2 ON e.user_id = s2.user_id
+      FROM {events} e JOIN s2 ON e.user_id = s2.user_id
       WHERE e.event_type = 'purchase' AND e.ts > s2.t_click
       GROUP BY e.user_id
     )
@@ -1747,50 +1693,6 @@ def x_embedding_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
     LEFT JOIN s3 ON s1.user_id = s3.user_id
     """,
 )
-def t_funnel_3step(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Strict-order 3-step funnel (signup → first click AFTER signup →
-    first purchase AFTER that click) — the product-analytics shape the
-    2-step interval join (t_click_to_buy_conversion) generalizes to.
-    Each stage is one user-keyed aggregate over a filtered scan + one
-    equi-join; all three shuffles share the user_id key, so at scale a
-    user_id-bucketed events table runs the whole funnel exchange-free.
-    Strictly-after semantics (ts >, not >=) pin tie behavior across
-    engines."""
-    ev = load_table(spark, sf_dir, "events").select("user_id", "event_type", "ts")
-    s1 = (
-        ev.filter(F.col("event_type") == "signup")
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_signup"))
-    )
-    s2 = (
-        ev.filter(F.col("event_type") == "click")
-        .join(s1, "user_id")
-        .filter(F.col("ts") > F.col("t_signup"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_click"))
-    )
-    s3 = (
-        ev.filter(F.col("event_type") == "purchase")
-        .join(s2, "user_id")
-        .filter(F.col("ts") > F.col("t_click"))
-        .groupBy("user_id")
-        .agg(F.min("ts").alias("t_purchase"))
-    )
-    return (
-        s1.join(s2, "user_id", "left")
-        .join(s3, "user_id", "left")
-        .select(
-            "user_id",
-            "t_signup",
-            "t_click",
-            "t_purchase",
-            (
-                F.lit(1)
-                + F.col("t_click").isNotNull().cast("int")
-                + F.col("t_purchase").isNotNull().cast("int")
-            ).cast("int").alias("steps_completed"),
-        )
-    )
 
 
 @register(
@@ -1964,6 +1866,8 @@ def x_rolling_mau_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stays DataFrame-bodied: its oracle asserts the sketch verdict as a
+# constant TRUE, which the SQL text would skip computing.
 @register(
     "x_customer_churn_sketch",
     oracle="""
@@ -2450,16 +2354,20 @@ def agg_vwap_supplier_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Longest run of CONSECUTIVE same-type events per user — the
+# gaps-and-islands streak variant (w_gap_detection finds time gaps; this
+# groups value runs): a per-user and a per-(user, type) row_number
+# differ by a constant within a run.
+register_sql(
     "w_longest_streak",
-    oracle="""
+    """
     WITH seq AS (
       SELECT user_id, event_type,
              row_number() OVER (PARTITION BY user_id
                                 ORDER BY ts, event_id) AS rn_all,
              row_number() OVER (PARTITION BY user_id, event_type
                                 ORDER BY ts, event_id) AS rn_type
-      FROM events
+      FROM {events}
     ), runs AS (
       SELECT user_id, event_type, rn_all - rn_type AS grp,
              CAST(count(*) AS BIGINT) AS run_len
@@ -2470,24 +2378,6 @@ def agg_vwap_supplier_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM runs GROUP BY user_id
     """,
 )
-def w_longest_streak(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Longest run of CONSECUTIVE same-type events per user — the
-    gaps-and-islands streak variant (w_gap_detection finds time gaps;
-    this groups value runs). Two row_numbers over the same (user, time)
-    sort — their difference is constant within a run — then two keyed
-    aggregations; everything shuffles on user_id once, so a cluster
-    plans one exchange."""
-    ev = load_table(spark, sf_dir, "events").select(
-        F.col("user_id").cast("long").alias("user_id"), "event_type", "ts", "event_id"
-    )
-    w_all = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    w_type = Window.partitionBy("user_id", "event_type").orderBy("ts", "event_id")
-    runs = (
-        ev.withColumn("grp", F.row_number().over(w_all) - F.row_number().over(w_type))
-        .groupBy("user_id", "event_type", "grp")
-        .agg(F.count(F.lit(1)).cast("long").alias("run_len"))
-    )
-    return runs.groupBy("user_id").agg(F.max("run_len").alias("longest_streak"))
 
 
 @register(

@@ -12,7 +12,7 @@ from pyspark.sql import functions as F
 
 from ..schemas import parse_filename_date
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 
 @register(
@@ -128,9 +128,14 @@ def f_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# F5/F8/F9/F16/F17/F18: nullif-guarded division, epsilon guard, CASE
+# banding, sign, abs, scale (reference regression.py:108,:138-141,
+# ml_impl.py:101,:192, spark_stream.py:142). Row-wise IEEE arithmetic is
+# bit-identical across engines, so these columns are deliberately
+# UNROUNDED.
+register_sql(
     "f_guarded_ratios",
-    oracle="""
+    """
     SELECT l_orderkey, l_linenumber,
            l_extendedprice / nullif(l_quantity, 0)                  AS unit_price,
            l_discount / (l_tax + 1e-6)                              AS disc_tax_ratio,
@@ -139,31 +144,9 @@ def f_string_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sign(l_extendedprice - 30000) AS DOUBLE)            AS price_sign,
            abs(l_extendedprice - 30000)                             AS price_dev,
            l_discount * 100                                         AS disc_pct
-    FROM lineitem
+    FROM {lineitem}
     """,
 )
-def f_guarded_ratios(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F5/F8/F9/F16/F17/F18: nullif-guarded division (Spark x/0→NULL
-    pinned on both sides), epsilon guard, when/otherwise banding, sign,
-    abs, scale (reference regression.py:108,:138-141, ml_impl.py:101,
-    :192, spark_stream.py:142). Row-wise IEEE arithmetic is bit-identical
-    across engines, so these columns are deliberately UNROUNDED — rounding
-    near-boundary quotients (2-decimal price / power-of-2 quantity) is
-    what breaks hash parity, not float noise."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return li.select(
-        "l_orderkey",
-        "l_linenumber",
-        (F.col("l_extendedprice") / F.nullif(F.col("l_quantity"), F.lit(0))).alias("unit_price"),
-        (F.col("l_discount") / (F.col("l_tax") + F.lit(1e-6))).alias("disc_tax_ratio"),
-        F.when(F.col("l_quantity") > 40, "bulk")
-        .when(F.col("l_quantity") > 10, "mid")
-        .otherwise("small")
-        .alias("qty_band"),
-        F.signum(F.col("l_extendedprice") - 30000).alias("price_sign"),
-        F.abs(F.col("l_extendedprice") - 30000).alias("price_dev"),
-        (F.col("l_discount") * 100).alias("disc_pct"),
-    )
 
 
 @register(
@@ -185,44 +168,29 @@ def f_json_props_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# F15: UTC → Asia/Colombo (fixed UTC+5:30, no DST — the interval form
+# is exact) — reference scraper/main.py:33-34.
+register_sql(
     "f_tz_convert_colombo",
-    oracle="""
+    """
     SELECT event_id, ts + INTERVAL 330 MINUTE AS ts_colombo
-    FROM events
+    FROM {events}
     """,
 )
-def f_tz_convert_colombo(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F15: UTC → Asia/Colombo (fixed UTC+5:30, no DST — the interval
-    oracle is exact) — reference scraper/main.py:33-34."""
-    ev = load_table(spark, sf_dir, "events")
-    return ev.select(
-        "event_id", F.from_utc_timestamp("ts", "Asia/Colombo").alias("ts_colombo")
-    )
 
 
-@register(
+# F7: fillna in scalar+subset and per-column forms (reference
+# regression.py:53,:180, ml_impl.py:38-41) — nulls synthesized since the
+# source tables are dense.
+register_sql(
     "f_fillna_policy",
-    oracle="""
+    """
     SELECT event_id,
            coalesce(CASE WHEN value < 10 THEN NULL ELSE round(value, 6) END, 0.0) AS value_filled,
            coalesce(CASE WHEN event_type = 'view' THEN NULL ELSE event_type END, 'unknown') AS type_filled
-    FROM events
+    FROM {events}
     """,
 )
-def f_fillna_policy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """F7: fillna in scalar+subset and dict forms (reference
-    regression.py:53,:180, ml_impl.py:38-41) — nulls synthesized since the
-    driver tables are dense."""
-    ev = load_table(spark, sf_dir, "events")
-    df = ev.select(
-        "event_id",
-        F.when(F.col("value") < 10, None).otherwise(F.round("value", 6)).alias("value_filled"),
-        F.when(F.col("event_type") == "view", None).otherwise(F.col("event_type")).alias(
-            "type_filled"
-        ),
-    )
-    return df.na.fill({"value_filled": 0.0, "type_filled": "unknown"})
 
 
 @register(

@@ -20,7 +20,7 @@ from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as X
 from ..sources import load_table
-from . import register
+from . import register, register_sql
 
 
 @register(
@@ -801,31 +801,21 @@ def x_hash_split_train_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Deterministic stratified sampling: every 20th document per (lang,
+# source) stratum in doc_id order — an exact 5% rate per stratum,
+# reproducible across engines (unlike RNG df.sampleBy). Costs one shuffle
+# on the stratum key; x_hash_split_train_test is the shuffle-free
+# approximate-rate alternative.
+register_sql(
     "x_stratified_sample_documents",
-    oracle="""
+    """
     SELECT lang, source, doc_id, n_chars
     FROM (SELECT lang, source, doc_id, n_chars,
                  row_number() OVER (PARTITION BY lang, source ORDER BY doc_id) AS rn
-          FROM documents) t
+          FROM {documents}) t
     WHERE rn % 20 = 1
     """,
 )
-def x_stratified_sample_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Deterministic stratified sampling: every 20th document per
-    (lang, source) stratum in doc_id order — an exact 5% rate per
-    stratum, reproducible across engines (unlike RNG df.sampleBy).
-    Costs one shuffle on the stratum key; when strata are balanced the
-    shuffle-free alternative is hash-mod sampling (see
-    x_hash_split_train_test), which is uniform WITHIN each stratum by
-    construction but only approximately hits the per-stratum rate."""
-    docs = load_table(spark, sf_dir, "documents")
-    w = Window.partitionBy("lang", "source").orderBy("doc_id")
-    return (
-        docs.withColumn("rn", F.row_number().over(w))
-        .filter(F.col("rn") % 20 == 1)
-        .select("lang", "source", "doc_id", "n_chars")
-    )
 
 
 @register(

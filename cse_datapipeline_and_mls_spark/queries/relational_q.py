@@ -19,6 +19,10 @@ from . import register, register_sql
 # ---------------------------------------------------------------------------
 
 
+# Stays DataFrame-bodied: the read_path benchmark runs this row; with
+# it and t_session_window_30min as SQL text, read_path batch_p50_ms
+# was 7% worse over 6 interleaved pairs (more than the parent's
+# spread), though the row alone ran 0.82x in its own A/B.
 @register(
     "tpch_q1_pricing_summary",
     oracle="""
@@ -114,6 +118,8 @@ def broadcast_join_segment_sales(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+# Stays DataFrame-bodied: its SQL text ran ~1.8x slower at sf0.1 with
+# the same shuffle count; this form fixes the join order.
 @register(
     "tpch_q5_regional_revenue",
     oracle="""
@@ -216,34 +222,18 @@ def tpch_q3_shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
     return R.top_k(joined, [F.desc("revenue"), F.asc("l_orderkey")], 10)
 
 
-@register(
+# TPC-H Q6: the pure pushdown showcase — scan → filter → global agg, no
+# shuffle of data rows; all three predicates reach the parquet reader.
+register_sql(
     "tpch_q6_forecast_revenue",
-    oracle="""
+    """
     SELECT round(sum(l_extendedprice * l_discount), 4) AS revenue,
            count(*) AS n
-    FROM lineitem
+    FROM {lineitem}
     WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
       AND l_discount BETWEEN 0.05 AND 0.07 AND l_quantity < 24
     """,
 )
-def tpch_q6_forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """TPC-H Q6: the pure pushdown showcase — scan → filter → global agg,
-    ZERO shuffles of data rows (each task emits one partial sum). All
-    three predicates reach the parquet reader as PushedFilters; at
-    100 TB this query is I/O-bound and embarrassingly parallel."""
-    li = load_table(spark, sf_dir, "lineitem")
-    return (
-        li.filter(
-            (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
-            & (F.col("l_shipdate") < F.lit("1997-01-01").cast("timestamp"))
-            & (F.col("l_discount") >= 0.05)
-            & (F.col("l_discount") <= 0.07)
-            & (F.col("l_quantity") < 24)
-        ).agg(
-            F.round(F.sum(F.col("l_extendedprice") * F.col("l_discount")), 4).alias("revenue"),
-            F.count(F.lit(1)).alias("n"),
-        )
-    )
 
 
 @register(
@@ -494,6 +484,8 @@ def topk_events_per_type(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.select("event_type", "event_id", F.round("value", 6).alias("value"), "rn")
 
 
+# Stays DataFrame-bodied: its SQL text ran 1.01x slower (median of 14
+# interleaved A/B pairs).
 @register(
     "set_union_nations",
     oracle="""
@@ -508,6 +500,8 @@ def set_union_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.union(s).distinct()
 
 
+# Stays DataFrame-bodied: its SQL text ran 1.02x slower (median of 14
+# interleaved A/B pairs).
 @register(
     "set_intersect_nations",
     oracle="""
@@ -522,18 +516,14 @@ def set_intersect_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
     return c.intersect(s)
 
 
-@register(
+register_sql(
     "set_except_nations",
-    oracle="""
-    SELECT c_nationkey AS nationkey FROM customer
+    """
+    SELECT c_nationkey AS nationkey FROM {customer}
     EXCEPT
-    SELECT s_nationkey FROM supplier
+    SELECT s_nationkey FROM {supplier}
     """,
 )
-def set_except_nations(spark: SparkSession, sf_dir: str) -> DataFrame:
-    c = load_table(spark, sf_dir, "customer").select(F.col("c_nationkey").alias("nationkey"))
-    s = load_table(spark, sf_dir, "supplier").select(F.col("s_nationkey").alias("nationkey"))
-    return c.subtract(s)
 
 
 # Grouping-sets family (absent from the reference; SURVEY §2.4 absent
@@ -559,21 +549,17 @@ register_sql(
 )
 
 
-@register(
+# Pivot with pinned values as filtered aggregates: one aggregation, no
+# distinct-values scan to discover the pivot columns.
+register_sql(
     "pivot_qty_by_status",
-    oracle="""
+    """
     SELECT l_returnflag,
            round(sum(l_quantity) FILTER (WHERE l_linestatus = 'O'), 4) AS O,
            round(sum(l_quantity) FILTER (WHERE l_linestatus = 'F'), 4) AS F
-    FROM lineitem GROUP BY l_returnflag
+    FROM {lineitem} GROUP BY l_returnflag
     """,
 )
-def pivot_qty_by_status(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot with pinned values (pinning avoids the extra distinct-scan
-    Spark otherwise runs to discover pivot columns)."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = li.groupBy("l_returnflag").pivot("l_linestatus", ["O", "F"]).sum("l_quantity")
-    return p.select("l_returnflag", F.round("O", 4).alias("O"), F.round("F", 4).alias("F"))
 
 
 @register(
@@ -650,9 +636,12 @@ def salted_join_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@register(
+# Pivot (long→wide), the inverse of unpivot_lineitem_measures: order
+# counts and exact cent totals per priority across the three pinned order
+# statuses, as one map-side-combined conditional aggregation.
+register_sql(
     "pivot_status_by_priority",
-    oracle="""
+    """
     SELECT o_orderpriority,
            CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END) AS BIGINT) AS n_f,
            CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_o,
@@ -666,38 +655,6 @@ def salted_join_priority_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
            CAST(sum(CASE WHEN o_orderstatus = 'P'
                 THEN CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) ELSE 0 END)
                 AS BIGINT) AS cents_p
-    FROM orders GROUP BY o_orderpriority ORDER BY o_orderpriority
+    FROM {orders} GROUP BY o_orderpriority ORDER BY o_orderpriority
     """,
 )
-def pivot_status_by_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Pivot (long→wide) — the inverse of unpivot_lineitem_measures and
-    the one §2.7-family reshaping op the registry lacked: order counts
-    and exact cent totals per priority, pivoted across the three order
-    statuses. The pivot VALUES ARE PINNED ('F','O','P'): Spark's
-    values-less pivot runs a hidden distinct-values collect job first
-    and caps at spark.sql.pivotMaxValues — pinning them keeps the plan
-    a single map-side-combined aggregation (the conditional-agg plan
-    the oracle spells out), which is the only pivot shape that scales.
-
-    Determinism: counts and cent sums are exact int64 — no
-    quantization anywhere."""
-    o = load_table(spark, sf_dir, "orders")
-    cents = F.floor(F.col("o_totalprice") * 100 + 0.5).cast("long")
-    wide = (
-        o.select("o_orderpriority", "o_orderstatus", cents.alias("cents"))
-        .groupBy("o_orderpriority")
-        .pivot("o_orderstatus", ["F", "O", "P"])
-        .agg(
-            F.count(F.lit(1)).alias("n"),
-            F.sum("cents").alias("cents"),
-        )
-    )
-    return wide.select(
-        "o_orderpriority",
-        F.coalesce(F.col("F_n"), F.lit(0)).cast("long").alias("n_f"),
-        F.coalesce(F.col("O_n"), F.lit(0)).cast("long").alias("n_o"),
-        F.coalesce(F.col("P_n"), F.lit(0)).cast("long").alias("n_p"),
-        F.coalesce(F.col("F_cents"), F.lit(0)).cast("long").alias("cents_f"),
-        F.coalesce(F.col("O_cents"), F.lit(0)).cast("long").alias("cents_o"),
-        F.coalesce(F.col("P_cents"), F.lit(0)).cast("long").alias("cents_p"),
-    ).orderBy("o_orderpriority")

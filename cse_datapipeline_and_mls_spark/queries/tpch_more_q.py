@@ -10,11 +10,9 @@ stand-ins on the same tables. That keeps every classic TPC-H optimizer
 shape exercised and oracle-checked even where the literal benchmark
 columns don't exist.
 
-Shared scale posture (see each docstring for specifics): filters reach
-the parquet scan before any join; only fixed-size dims (region 5 rows,
-nation 25 rows) carry explicit broadcast hints; customer/supplier/part
-grow with SF so their joins are left to AQE's measured-size choice;
-aggregation happens below joins wherever semantics allow.
+Every row but Q21 is one SQL text (``register_sql``): Catalyst plans
+the joins, pushes the filters to the parquet scans and picks broadcast
+sides from measured sizes, and DuckDB runs the same text as the oracle.
 """
 
 from __future__ import annotations
@@ -23,82 +21,47 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources import load_table
-from . import register
-
-def _rev():
-    return F.col("l_extendedprice") * (1 - F.col("l_discount"))
+from . import register, register_sql
 
 
-def _ts(s: str):
-    return F.lit(s).cast("timestamp")
-
-
-@register(
+# Q7: nation-pair trade volume by year.
+register_sql(
     "tpch_q7_volume_shipping",
-    oracle="""
+    """
     SELECT n1.n_name AS supp_nation, n2.n_name AS cust_nation,
            year(l.l_shipdate) AS l_year,
            round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM lineitem l
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o   ON o.o_orderkey = l.l_orderkey
-    JOIN customer c ON c.c_custkey = o.o_custkey
-    JOIN nation n1  ON n1.n_nationkey = s.s_nationkey
-    JOIN nation n2  ON n2.n_nationkey = c.c_nationkey
+    FROM {lineitem} l
+    JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+    JOIN {orders} o   ON o.o_orderkey = l.l_orderkey
+    JOIN {customer} c ON c.c_custkey = o.o_custkey
+    JOIN {nation} n1  ON n1.n_nationkey = s.s_nationkey
+    JOIN {nation} n2  ON n2.n_nationkey = c.c_nationkey
     WHERE l.l_shipdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
       AND ((n1.n_name = 'NATION_1' AND n2.n_name = 'NATION_2')
         OR (n1.n_name = 'NATION_2' AND n2.n_name = 'NATION_1'))
     GROUP BY 1, 2, 3
     """,
 )
-def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q7: nation-pair trade volume by year. The supplier-side nation
-    filter runs BEFORE the orders join (n1 ∈ {pair} prunes ~92% of
-    lineitem early at 25 nations); nation is a broadcast literal-sized
-    dim; supplier/customer joins are AQE-sized. Two big shuffles
-    (li⋈orders, +customer), both on keys that bucketing would co-locate
-    at 100 TB."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        F.col("l_shipdate").between(_ts("1996-01-01"), _ts("1997-12-31"))
-    )
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders")
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    pair = ("NATION_1", "NATION_2")
-    n1 = n.select(F.col("n_nationkey").alias("n1_key"), F.col("n_name").alias("supp_nation"))
-    n2 = n.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("cust_nation"))
-    return (
-        li.join(s, li.l_suppkey == s.s_suppkey)
-        .join(F.broadcast(n1), F.col("s_nationkey") == F.col("n1_key"))
-        .filter(F.col("supp_nation").isin(*pair))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(n2), F.col("c_nationkey") == F.col("n2_key"))
-        .filter(
-            ((F.col("supp_nation") == pair[0]) & (F.col("cust_nation") == pair[1]))
-            | ((F.col("supp_nation") == pair[1]) & (F.col("cust_nation") == pair[0]))
-        )
-        .groupBy("supp_nation", "cust_nation", F.year("l_shipdate").alias("l_year"))
-        .agg(F.round(F.sum(_rev()), 4).alias("revenue"))
-    )
 
 
-@register(
+# Q8: NATION_3's share of ECONOMY-part revenue sold into ASIA, by order
+# year — a conditional agg, not a self-join of two filtered copies.
+register_sql(
     "tpch_q8_market_share",
-    oracle="""
+    """
     WITH all_sales AS (
       SELECT year(o.o_orderdate) AS o_year,
              l.l_extendedprice * (1 - l.l_discount) AS volume,
              n2.n_name AS supp_nation
-      FROM lineitem l
-      JOIN part p     ON p.p_partkey = l.l_partkey
-      JOIN supplier s ON s.s_suppkey = l.l_suppkey
-      JOIN orders o   ON o.o_orderkey = l.l_orderkey
-      JOIN customer c ON c.c_custkey = o.o_custkey
-      JOIN nation n1  ON n1.n_nationkey = c.c_nationkey
-      JOIN region r   ON r.r_regionkey = n1.n_regionkey
-      JOIN nation n2  ON n2.n_nationkey = s.s_nationkey
+      FROM {lineitem} l
+      JOIN {part} p     ON p.p_partkey = l.l_partkey
+      JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+      JOIN {orders} o   ON o.o_orderkey = l.l_orderkey
+      JOIN {customer} c ON c.c_custkey = o.o_custkey
+      JOIN {nation} n1  ON n1.n_nationkey = c.c_nationkey
+      JOIN {region} r   ON r.r_regionkey = n1.n_regionkey
+      JOIN {nation} n2  ON n2.n_nationkey = s.s_nationkey
       WHERE r.r_name = 'ASIA' AND p.p_type = 'ECONOMY'
         AND o.o_orderdate BETWEEN TIMESTAMP '1996-01-01' AND TIMESTAMP '1997-12-31'
     )
@@ -108,301 +71,147 @@ def tpch_q7_volume_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM all_sales GROUP BY o_year
     """,
 )
-def tpch_q8_market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q8: NATION_3's share of ECONOMY-part revenue sold into ASIA, by
-    order year. The part-type filter lands on the part scan and prunes
-    lineitem FIRST (1-in-6 selectivity) — the cheapest join is done
-    before the expensive orders/customer chain. region⋈nation collapses
-    to a broadcast allow-list of nationkeys; the share is a conditional
-    agg, not a self-join of two filtered copies."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "ECONOMY")
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate").between(_ts("1996-01-01"), _ts("1997-12-31"))
-    )
-    c = load_table(spark, sf_dir, "customer")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    asia_keys = n.join(F.broadcast(r), n.n_regionkey == r.r_regionkey).select(
-        F.col("n_nationkey").alias("asia_key")
-    )
-    n2 = n.select(F.col("n_nationkey").alias("n2_key"), F.col("n_name").alias("supp_nation"))
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(c, F.col("o_custkey") == F.col("c_custkey"))
-        .join(F.broadcast(asia_keys), F.col("c_nationkey") == F.col("asia_key"))
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(F.broadcast(n2), F.col("s_nationkey") == F.col("n2_key"))
-        .groupBy(F.year("o_orderdate").alias("o_year"))
-        .agg(
-            F.round(
-                F.sum(F.when(F.col("supp_nation") == "NATION_3", _rev()).otherwise(F.lit(0.0)))
-                / F.sum(_rev()),
-                6,
-            ).alias("mkt_share")
-        )
-    )
 
 
-@register(
+# Q9 shape: profit by supplier nation × order year for parts whose name
+# matches a substring. Stand-in: no partsupp, so profit omits the
+# ps_supplycost × quantity term (revenue only).
+register_sql(
     "tpch_q9_shape_product_profit",
-    oracle="""
+    """
     SELECT n.n_name AS nation, year(o.o_orderdate) AS o_year,
            round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS sum_profit
-    FROM lineitem l
-    JOIN part p     ON p.p_partkey = l.l_partkey
-    JOIN supplier s ON s.s_suppkey = l.l_suppkey
-    JOIN orders o   ON o.o_orderkey = l.l_orderkey
-    JOIN nation n   ON n.n_nationkey = s.s_nationkey
+    FROM {lineitem} l
+    JOIN {part} p     ON p.p_partkey = l.l_partkey
+    JOIN {supplier} s ON s.s_suppkey = l.l_suppkey
+    JOIN {orders} o   ON o.o_orderkey = l.l_orderkey
+    JOIN {nation} n   ON n.n_nationkey = s.s_nationkey
     WHERE p.p_name LIKE '%widget%'
     GROUP BY 1, 2
     """,
 )
-def tpch_q9_shape_product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q9 shape: profit by supplier nation × order year for parts whose
-    name matches a substring. Stand-in: no ``partsupp``, so profit omits
-    the ps_supplycost × quantity term (revenue only) — the 5-way join
-    tree and the name-LIKE part prune are the Q9 structure. Part filter
-    first, nation broadcast, everything else AQE."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("%widget%"))
-    s = load_table(spark, sf_dir, "supplier")
-    o = load_table(spark, sf_dir, "orders")
-    n = load_table(spark, sf_dir, "nation")
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .join(s, F.col("l_suppkey") == F.col("s_suppkey"))
-        .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
-        .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
-        .groupBy(F.col("n_name").alias("nation"), F.year("o_orderdate").alias("o_year"))
-        .agg(F.round(F.sum(_rev()), 4).alias("sum_profit"))
-    )
 
 
-@register(
+# Q11 shape: parts whose revenue exceeds a multiple of the MEAN part
+# revenue — the global-scalar-threshold HAVING. Stand-ins: part value is
+# lineitem revenue (no partsupp), and the cutoff is 1.5× the mean instead
+# of a fraction of the total, so selectivity does not decay with SF.
+register_sql(
     "tpch_q11_shape_important_parts",
-    oracle="""
+    """
     WITH value_per_part AS (
       SELECT l_partkey, sum(l_extendedprice * (1 - l_discount)) AS value
-      FROM lineitem GROUP BY l_partkey
+      FROM {lineitem} GROUP BY l_partkey
     )
     SELECT l_partkey, round(value, 4) AS value
     FROM value_per_part
     WHERE value > 1.5 * (SELECT sum(value) / count(*) FROM value_per_part)
     """,
 )
-def tpch_q11_shape_important_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q11 shape: parts whose revenue exceeds a multiple of the MEAN
-    part revenue — the global-scalar-threshold HAVING. Stand-in: part
-    value comes from lineitem revenue (no partsupp
-    supplycost×availqty), and the canonical FRACTION-of-total cutoff
-    (0.0001/SF in TPC-H — itself scale-dependent by definition) becomes
-    1.5× the mean so selectivity is scale-INVARIANT: the query returns a
-    stable small tail of parts at every SF instead of decaying to zero as
-    the part count grows. The scalar is a 1-row broadcast crossJoin,
-    not a driver collect; the per-part agg runs once and feeds both
-    sides. Threshold compare is on the raw double (both engines sum the
-    same per-part set), output rounded."""
-    li = load_table(spark, sf_dir, "lineitem")
-    value = li.groupBy("l_partkey").agg(F.sum(_rev()).alias("value"))
-    thresh = value.agg((F.sum("value") / F.count(F.lit(1))).alias("mean_value"))
-    return (
-        value.crossJoin(F.broadcast(thresh))
-        .filter(F.col("value") > 1.5 * F.col("mean_value"))
-        .select("l_partkey", F.round("value", 4).alias("value"))
-    )
 
 
-@register(
+# Q12 shape: conditional priority counts per shipping bucket. Stand-in:
+# no l_shipmode/l_commitdate/l_receiptdate, so the bucket is ship lag vs
+# order date (late = >120 days).
+register_sql(
     "tpch_q12_shape_priority_shipping",
-    oracle="""
+    """
     SELECT CASE WHEN l.l_shipdate > o.o_orderdate + INTERVAL 120 DAY
                 THEN 'late' ELSE 'ontime' END AS ship_bucket,
            CAST(sum(CASE WHEN o.o_orderpriority IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)
              AS BIGINT) AS high_line_count,
            CAST(sum(CASE WHEN o.o_orderpriority NOT IN ('1-URGENT', '2-HIGH') THEN 1 ELSE 0 END)
              AS BIGINT) AS low_line_count
-    FROM lineitem l JOIN orders o ON o.o_orderkey = l.l_orderkey
+    FROM {lineitem} l JOIN {orders} o ON o.o_orderkey = l.l_orderkey
     WHERE year(l.l_shipdate) = 1997
     GROUP BY 1
     """,
 )
-def tpch_q12_shape_priority_shipping(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q12 shape: conditional priority counts per shipping bucket.
-    Stand-in: no l_shipmode/l_commitdate/l_receiptdate, so the bucket is
-    ship-lag vs order date (late = >120 days) — same
-    join-then-conditional-agg structure, 2-row output. The year filter
-    prunes the lineitem scan; one shuffle on orderkey."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1997)
-    o = load_table(spark, sf_dir, "orders")
-    high = F.col("o_orderpriority").isin("1-URGENT", "2-HIGH")
-    bucket = (
-        F.when(
-            F.col("l_shipdate") > F.col("o_orderdate") + F.expr("INTERVAL 120 DAYS"), "late"
-        ).otherwise("ontime")
-    )
-    return (
-        li.join(o, li.l_orderkey == o.o_orderkey)
-        .groupBy(bucket.alias("ship_bucket"))
-        .agg(
-            F.sum(F.when(high, 1).otherwise(0)).alias("high_line_count"),
-            F.sum(F.when(~high, 1).otherwise(0)).alias("low_line_count"),
-        )
-    )
 
 
-@register(
+# Q13: distribution of order counts per customer — outer join + two-level
+# aggregation (customers with no qualifying order land in c_count=0).
+# Stand-in: the o_comment NOT LIKE filter is an o_orderpriority
+# exclusion.
+register_sql(
     "tpch_q13_customer_distribution",
-    oracle="""
+    """
     SELECT c_count, count(*) AS custdist
     FROM (
       SELECT c.c_custkey, count(o.o_orderkey) AS c_count
-      FROM customer c
-      LEFT JOIN orders o ON o.o_custkey = c.c_custkey
+      FROM {customer} c
+      LEFT JOIN {orders} o ON o.o_custkey = c.c_custkey
                         AND o.o_orderpriority <> '4-NOT SPECIFIED'
       GROUP BY c.c_custkey
     ) t
     GROUP BY c_count
     """,
 )
-def tpch_q13_customer_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q13: distribution of order counts per customer — the classic
-    outer-join + two-level aggregation (customers with zero qualifying
-    orders must appear in the c_count=0 bucket, which an inner join
-    would drop). Stand-in: the o_comment NOT LIKE filter becomes an
-    o_orderpriority exclusion (no comment column). First agg shuffles on
-    custkey; second agg's input is one row per customer, grouped on the
-    tiny c_count domain — map-side combine collapses it."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderpriority") != "4-NOT SPECIFIED"
-    )
-    per_cust = (
-        c.join(o, c.c_custkey == o.o_custkey, "left")
-        .groupBy("c_custkey")
-        .agg(F.count("o_orderkey").alias("c_count"))
-    )
-    return per_cust.groupBy("c_count").agg(F.count(F.lit(1)).alias("custdist"))
 
 
-@register(
+# Q14: PROMO share of one month's revenue — a conditional aggregate over
+# a date-pruned scan, single-row output.
+register_sql(
     "tpch_q14_promo_revenue",
-    oracle="""
+    """
     SELECT round(100.0 * sum(CASE WHEN p.p_type = 'PROMO'
                                   THEN l.l_extendedprice * (1 - l.l_discount)
                                   ELSE 0 END)
                  / sum(l.l_extendedprice * (1 - l.l_discount)), 6) AS promo_revenue
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE l.l_shipdate >= TIMESTAMP '1996-09-01'
       AND l.l_shipdate < TIMESTAMP '1996-10-01'
     """,
 )
-def tpch_q14_promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q14: PROMO share of one month's revenue — conditional aggregate
-    over a date-pruned scan, single-row output. The month filter reaches
-    the parquet scan; part join is AQE-sized (part is SF-proportional);
-    the division happens once, after both sums."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-09-01")) & (F.col("l_shipdate") < _ts("1996-10-01"))
-    )
-    p = load_table(spark, sf_dir, "part")
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .agg(
-            F.round(
-                100.0
-                * F.sum(F.when(F.col("p_type") == "PROMO", _rev()).otherwise(F.lit(0.0)))
-                / F.sum(_rev()),
-                6,
-            ).alias("promo_revenue")
-        )
-    )
 
 
-@register(
+# Q15: supplier(s) with the maximum quarterly revenue — the
+# view-plus-scalar-max pattern; rounding to 4dp before the compare pins
+# the equality across engines.
+register_sql(
     "tpch_q15_top_supplier",
-    oracle="""
+    """
     WITH revenue AS (
       SELECT l_suppkey AS supplier_no,
              round(sum(l_extendedprice * (1 - l_discount)), 4) AS total_revenue
-      FROM lineitem
+      FROM {lineitem}
       WHERE l_shipdate >= TIMESTAMP '1996-01-01' AND l_shipdate < TIMESTAMP '1996-04-01'
       GROUP BY l_suppkey
     )
     SELECT s.s_suppkey, s.s_name, r.total_revenue
-    FROM supplier s JOIN revenue r ON s.s_suppkey = r.supplier_no
+    FROM {supplier} s JOIN revenue r ON s.s_suppkey = r.supplier_no
     WHERE r.total_revenue = (SELECT max(total_revenue) FROM revenue)
     """,
 )
-def tpch_q15_top_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q15: supplier(s) with the maximum quarterly revenue — the
-    view-plus-scalar-max pattern. Revenue is aggregated ONCE and feeds
-    both the max (1-row broadcast) and the equality filter; rounding to
-    4dp before the compare pins the equality across engines. The
-    supplier join happens after the filter — at most a handful of rows
-    reach it."""
-    li = load_table(spark, sf_dir, "lineitem").filter(
-        (F.col("l_shipdate") >= _ts("1996-01-01")) & (F.col("l_shipdate") < _ts("1996-04-01"))
-    )
-    s = load_table(spark, sf_dir, "supplier")
-    revenue = li.groupBy(F.col("l_suppkey").alias("supplier_no")).agg(
-        F.round(F.sum(_rev()), 4).alias("total_revenue")
-    )
-    max_rev = revenue.agg(F.max("total_revenue").alias("max_revenue"))
-    return (
-        revenue.crossJoin(F.broadcast(max_rev))
-        .filter(F.col("total_revenue") == F.col("max_revenue"))
-        .join(s, F.col("supplier_no") == s.s_suppkey)
-        .select("s_suppkey", "s_name", "total_revenue")
-    )
 
 
-@register(
+# Q16 shape: distinct suppliers per (brand, type, size bucket) with a
+# NOT IN supplier exclusion. Stand-ins: the part-supplier link is the
+# distinct (partkey, suppkey) projection of lineitem (no partsupp); the
+# 'complaint' suppliers have a negative account balance.
+register_sql(
     "tpch_q16_shape_supplier_part_counts",
-    oracle="""
+    """
     SELECT p.p_brand, p.p_type,
            CAST(floor((p.p_size - 1) / 10) AS INT) AS size_bucket,
            count(DISTINCT l.l_suppkey) AS supplier_cnt
-    FROM (SELECT DISTINCT l_partkey, l_suppkey FROM lineitem) l
-    JOIN part p ON p.p_partkey = l.l_partkey
+    FROM (SELECT DISTINCT l_partkey, l_suppkey FROM {lineitem}) l
+    JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE p.p_brand <> 'Brand#1'
-      AND l.l_suppkey NOT IN (SELECT s_suppkey FROM supplier WHERE s_acctbal < 0)
+      AND l.l_suppkey NOT IN (SELECT s_suppkey FROM {supplier} WHERE s_acctbal < 0)
     GROUP BY 1, 2, 3
     """,
 )
-def tpch_q16_shape_supplier_part_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q16 shape: distinct suppliers per (brand, type, size-bucket) with
-    a NOT-IN supplier exclusion. Stand-ins: the part-supplier link is
-    the distinct (partkey, suppkey) projection of lineitem (no
-    partsupp); the 'complaint' suppliers are those with negative
-    account balance. The NOT IN compiles to a left-anti join against a
-    small aggregated side; the distinct-pairs projection collapses
-    lineitem's duplicates BEFORE the part join — at 100 TB that's a ~4×
-    row reduction ahead of the shuffle."""
-    li = load_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey").distinct()
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_brand") != "Brand#1")
-    bad = load_table(spark, sf_dir, "supplier").filter(F.col("s_acctbal") < 0).select(
-        "s_suppkey"
-    )
-    return (
-        li.join(bad, li.l_suppkey == bad.s_suppkey, "left_anti")
-        .join(p, F.col("l_partkey") == p.p_partkey)
-        .groupBy(
-            "p_brand",
-            "p_type",
-            F.floor((F.col("p_size") - 1) / 10).cast("int").alias("size_bucket"),
-        )
-        .agg(F.countDistinct("l_suppkey").alias("supplier_cnt"))
-    )
 
 
-@register(
+# Q19: an OR-of-conjunctions predicate spanning both join sides; the
+# single-side implications still push down to each scan. Stand-in:
+# p_container/shipmode clauses become size/quantity ranges.
+register_sql(
     "tpch_q19_disjunctive_revenue",
-    oracle="""
+    """
     SELECT round(sum(l.l_extendedprice * (1 - l.l_discount)), 4) AS revenue
-    FROM lineitem l JOIN part p ON p.p_partkey = l.l_partkey
+    FROM {lineitem} l JOIN {part} p ON p.p_partkey = l.l_partkey
     WHERE (p.p_brand = 'Brand#1' AND p.p_size BETWEEN 1 AND 15
            AND l.l_quantity BETWEEN 1 AND 20)
        OR (p.p_brand = 'Brand#2' AND p.p_size BETWEEN 10 AND 30
@@ -411,46 +220,18 @@ def tpch_q16_shape_supplier_part_counts(spark: SparkSession, sf_dir: str) -> Dat
            AND l.l_quantity BETWEEN 20 AND 40)
     """,
 )
-def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q19: disjunctive (OR-of-conjunctions) predicate spanning both join
-    sides — the optimizer test is that the partial, single-side
-    implications still push down: p_brand ∈ {1,2,3} prunes the part
-    scan and l_quantity ∈ [1,40] prunes lineitem, while the full OR is
-    evaluated post-join. Stand-in: p_container/shipmode clauses become
-    size/quantity ranges. Single-row output, one shuffle."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part")
-    cond = (
-        (
-            (F.col("p_brand") == "Brand#1")
-            & F.col("p_size").between(1, 15)
-            & F.col("l_quantity").between(1, 20)
-        )
-        | (
-            (F.col("p_brand") == "Brand#2")
-            & F.col("p_size").between(10, 30)
-            & F.col("l_quantity").between(10, 30)
-        )
-        | (
-            (F.col("p_brand") == "Brand#3")
-            & F.col("p_size").between(20, 50)
-            & F.col("l_quantity").between(20, 40)
-        )
-    )
-    return (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .filter(cond)
-        .agg(F.round(F.sum(_rev()), 4).alias("revenue"))
-    )
 
 
-@register(
+# Q20 shape: suppliers who dominate the supply of some part. Stand-in: no
+# partsupp.availqty, so 'dominates' = shipped more than half of a part's
+# 1996 volume (parts named red*, total ≥ 50 units).
+register_sql(
     "tpch_q20_shape_potential_suppliers",
-    oracle="""
+    """
     WITH shipped AS (
       SELECT l.l_partkey, l.l_suppkey, sum(l.l_quantity) AS qty_ps
-      FROM lineitem l
-      JOIN part p ON p.p_partkey = l.l_partkey
+      FROM {lineitem} l
+      JOIN {part} p ON p.p_partkey = l.l_partkey
       WHERE p.p_name LIKE 'red%' AND year(l.l_shipdate) = 1996
       GROUP BY 1, 2
     ), shares AS (
@@ -459,36 +240,15 @@ def tpch_q19_disjunctive_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
       FROM shipped
     )
     SELECT DISTINCT s.s_suppkey, s.s_name
-    FROM shares sh JOIN supplier s ON s.s_suppkey = sh.l_suppkey
+    FROM shares sh JOIN {supplier} s ON s.s_suppkey = sh.l_suppkey
     WHERE sh.qty_part >= 50 AND sh.qty_ps > 0.5 * sh.qty_part
     """,
 )
-def tpch_q20_shape_potential_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q20 shape: suppliers who dominate the supply of some part — a
-    semi-join chain over a correlated aggregate threshold. Stand-in: no
-    partsupp.availqty, so 'dominates' = shipped more than half of a
-    part's 1996 volume (parts named red*, total ≥ 50 units). The
-    per-part total is a window over the already-aggregated (part, supp)
-    rows — no second scan, no self-join; the supplier join sees only
-    qualifying suppkeys."""
-    li = load_table(spark, sf_dir, "lineitem").filter(F.year("l_shipdate") == 1996)
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_name").like("red%"))
-    s = load_table(spark, sf_dir, "supplier")
-    shipped = (
-        li.join(p, li.l_partkey == p.p_partkey)
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.sum("l_quantity").alias("qty_ps"))
-    )
-    w = Window.partitionBy("l_partkey")
-    shares = shipped.withColumn("qty_part", F.sum("qty_ps").over(w))
-    return (
-        shares.filter((F.col("qty_part") >= 50) & (F.col("qty_ps") > 0.5 * F.col("qty_part")))
-        .join(s, F.col("l_suppkey") == s.s_suppkey)
-        .select("s_suppkey", "s_name")
-        .distinct()
-    )
 
 
+# Stays DataFrame-bodied: its SQL text (two EXISTS self-joins) ran
+# 1.06x slower than this window form (median of 14 interleaved A/B
+# pairs).
 @register(
     "tpch_q21_shape_waiting_supplier",
     oracle="""
@@ -556,14 +316,18 @@ def tpch_q21_shape_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFra
     )
 
 
-@register(
+# Q22 shape: above-average-balance customers in selected countries with
+# no recent orders — scalar-average subquery, IN-list filter, NOT EXISTS.
+# Stand-ins: country code = c_nationkey (no c_phone); 'never ordered' is
+# 'no orders since 2000'.
+register_sql(
     "tpch_q22_shape_global_sales_opportunity",
-    oracle="""
+    """
     WITH avg_bal AS (
-      SELECT avg(c_acctbal) AS ab FROM customer WHERE c_acctbal > 0.0
+      SELECT avg(c_acctbal) AS ab FROM {customer} WHERE c_acctbal > 0.0
     ), cands AS (
       SELECT c.c_nationkey, c.c_custkey, c.c_acctbal
-      FROM customer c, avg_bal
+      FROM {customer} c, avg_bal
       WHERE c.c_nationkey IN (1, 3, 5, 7, 9, 11, 13)
         AND c.c_acctbal > avg_bal.ab
     )
@@ -571,54 +335,31 @@ def tpch_q21_shape_waiting_supplier(spark: SparkSession, sf_dir: str) -> DataFra
            round(sum(c_acctbal), 4) AS totacctbal
     FROM cands
     WHERE NOT EXISTS (
-      SELECT 1 FROM orders o
+      SELECT 1 FROM {orders} o
       WHERE o.o_custkey = cands.c_custkey
         AND o.o_orderdate >= TIMESTAMP '2000-01-01'
     )
     GROUP BY 1
     """,
 )
-def tpch_q22_shape_global_sales_opportunity(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q22 shape: above-average-balance customers in selected countries
-    with no recent orders. Structure preserved: scalar-average
-    subquery (1-row broadcast), IN-list country filter, NOT EXISTS →
-    left-anti join against date-filtered orders. Stand-ins: country
-    code = c_nationkey (no c_phone to substring); 'never ordered'
-    becomes 'no orders since 2000' (every synthetic customer has ≥1
-    lifetime order). The anti-join's right side is pre-filtered and
-    pre-projected to one column before the shuffle."""
-    c = load_table(spark, sf_dir, "customer")
-    o = load_table(spark, sf_dir, "orders").filter(
-        F.col("o_orderdate") >= _ts("2000-01-01")
-    ).select("o_custkey")
-    avg_bal = c.filter(F.col("c_acctbal") > 0.0).agg(F.avg("c_acctbal").alias("ab"))
-    cands = (
-        c.filter(F.col("c_nationkey").isin(1, 3, 5, 7, 9, 11, 13))
-        .crossJoin(F.broadcast(avg_bal))
-        .filter(F.col("c_acctbal") > F.col("ab"))
-    )
-    return (
-        cands.join(o, cands.c_custkey == o.o_custkey, "left_anti")
-        .groupBy(F.col("c_nationkey").alias("cntrycode"))
-        .agg(
-            F.count(F.lit(1)).alias("numcust"),
-            F.round(F.sum("c_acctbal"), 4).alias("totacctbal"),
-        )
-    )
 
 
-@register(
+# Q2 shape: for every LARGE part, the ASIA supplier(s) offering the
+# minimum price — the correlated-min subquery; ties are kept. Stand-in:
+# 'offer price' = min observed l_extendedprice per (part, supplier) in
+# lineitem (no partsupp.ps_supplycost).
+register_sql(
     "tpch_q2_shape_min_cost_supplier",
-    oracle="""
+    """
     WITH asia_supp AS (
       SELECT s.s_suppkey, s.s_name, n.n_name
-      FROM supplier s
-      JOIN nation n ON n.n_nationkey = s.s_nationkey
-      JOIN region r ON r.r_regionkey = n.n_regionkey
+      FROM {supplier} s
+      JOIN {nation} n ON n.n_nationkey = s.s_nationkey
+      JOIN {region} r ON r.r_regionkey = n.n_regionkey
       WHERE r.r_name = 'ASIA'
     ), offers AS (
       SELECT l.l_partkey, l.l_suppkey, min(l.l_extendedprice) AS min_price
-      FROM lineitem l
+      FROM {lineitem} l
       JOIN asia_supp a ON a.s_suppkey = l.l_suppkey
       GROUP BY 1, 2
     ), best AS (
@@ -628,42 +369,8 @@ def tpch_q22_shape_global_sales_opportunity(spark: SparkSession, sf_dir: str) ->
     )
     SELECT p.p_partkey, p.p_name, a.s_name, a.n_name, b.min_price
     FROM best b
-    JOIN part p ON p.p_partkey = b.l_partkey
+    JOIN {part} p ON p.p_partkey = b.l_partkey
     JOIN asia_supp a ON a.s_suppkey = b.l_suppkey
     WHERE b.min_price = b.best_price AND p.p_type = 'LARGE'
     """,
 )
-def tpch_q2_shape_min_cost_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Q2 shape: for every LARGE part, the ASIA supplier(s) offering the
-    minimum price — the correlated-min subquery. Stand-in: 'offer price'
-    = min observed l_extendedprice per (part, supplier) in lineitem (no
-    partsupp.ps_supplycost). The correlated min is a window over the
-    aggregated offers (one shuffle on partkey), not a re-scan;
-    region⋈nation collapses to a supplier allow-list broadcast before
-    lineitem is touched. Ties (several suppliers at the min) are kept,
-    like the original. Equality on the raw double is safe: both engines
-    pick min of the same value set."""
-    li = load_table(spark, sf_dir, "lineitem")
-    p = load_table(spark, sf_dir, "part").filter(F.col("p_type") == "LARGE")
-    s = load_table(spark, sf_dir, "supplier")
-    n = load_table(spark, sf_dir, "nation")
-    r = load_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
-    asia_supp = (
-        s.join(F.broadcast(n), s.s_nationkey == n.n_nationkey)
-        .join(F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey"))
-        .select("s_suppkey", "s_name", "n_name")
-    )
-    offers = (
-        li.join(asia_supp.select("s_suppkey"), li.l_suppkey == F.col("s_suppkey"))
-        .groupBy("l_partkey", "l_suppkey")
-        .agg(F.min("l_extendedprice").alias("min_price"))
-    )
-    best = offers.withColumn(
-        "best_price", F.min("min_price").over(Window.partitionBy("l_partkey"))
-    )
-    return (
-        best.filter(F.col("min_price") == F.col("best_price"))
-        .join(p, F.col("l_partkey") == p.p_partkey)
-        .join(asia_supp, F.col("l_suppkey") == F.col("s_suppkey"))
-        .select("p_partkey", "p_name", "s_name", "n_name", "min_price")
-    )

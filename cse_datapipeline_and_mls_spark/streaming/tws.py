@@ -127,6 +127,19 @@ def running_distinct_types(
     (PARTITION BY user_id ORDER BY ts, event_id ROWS UNBOUNDED
     PRECEDING))`` — asserted equal in tests/test_streaming.py and
     registered batch-side as ``w_running_distinct``.
+
+    Session side effect: this sets the session's
+    ``spark.sql.streaming.stateStore.providerClass`` to RocksDB
+    (``transformWithStateInPandas`` needs it) and leaves it set. The
+    provider is read when the caller starts the query, after this
+    function has returned, so it cannot be restored here. Every stateful
+    streaming query started later in the same session with a NEW
+    checkpoint (dropDuplicates, windowed aggregation,
+    applyInPandasWithState) therefore keeps its state in RocksDB too; a
+    query restarted from an existing checkpoint keeps the provider that
+    checkpoint recorded. Batch queries do not read the setting. Set the
+    conf back in the caller to keep later queries on the default
+    provider.
     """
     if not HAS_PROTOBUF:
         raise ImportError(

@@ -95,3 +95,22 @@ def test_coverage_md_totals_header_matches_registry():
         f"COVERAGE.md header claims {m.group(2)} oracle-checked but "
         f"{len(ORACLE)} queries have oracles"
     )
+
+
+def test_new_query_scan_finds_every_registered_name():
+    """`tools/check_correctness.py --new-since REV` reads registrations
+    from source text, so a registration form its pattern misses makes
+    every row of that form look new. Over the current query modules the
+    scan must find the whole registry, ``register_sql`` rows included."""
+    from tools.check_correctness import registered_names
+
+    qdir = os.path.join(
+        os.path.dirname(__file__), "..", "cse_datapipeline_and_mls_spark", "queries"
+    )
+    found: set[str] = set()
+    for fname in os.listdir(qdir):
+        if fname.endswith(".py"):
+            with open(os.path.join(qdir, fname)) as fh:
+                found |= registered_names(fh.read())
+    missing = sorted(set(QUERIES) - found)
+    assert not missing, f"new-query scan misses {len(missing)} rows: {missing}"

@@ -31,7 +31,6 @@ EXPECTED_CROSS = {
     "x_ann_ivf_topk",         # broadcast probe join
     "j_range_price_bands",    # 10-row literal band table
     "x_tfidf_top_terms",      # 1-row corpus-size scalar broadcast (docstring)
-    "tpch_q11_shape_important_parts",  # 1-row global threshold broadcast (scalar subquery)
     "tpch_q22_shape_global_sales_opportunity",  # 1-row global avg broadcast
     "x_bigram_lm_score",      # 1-row vocab-size broadcast
     "x_bigram_lm_score_pruned",  # 1-row (vsz, n_tok) scalar broadcast
@@ -132,7 +131,7 @@ EXPECTED_MANY_EXCHANGES = {
     "x_bigram_lm_score_pruned",  # same model-build aggs + TakeOrdered top-M; corpus side joins broadcast-only
     "x_pagerank_suppliers",  # power iteration: 3 exchanges x 6 iterations is the algorithm, not a plan bug
     "x_data_quality_checks",  # 1 fused row-level scan + unique groupBy + anti-join + result union (expectations.py)
-    "t_funnel_3step",         # 3 stage aggs + 2 stage joins, ALL keyed on user_id — exchange-free on a user-bucketed table (docstring)
+    "t_funnel_3step",         # 3 stage aggs + 2 stage joins, ALL keyed on user_id — exchange-free on a user-bucketed table (comment above its SQL, coverage_q.py)
     "x_dense_ids_documents",  # range exchange + pid counts + offsets theta-join + pid-clustered window; no single-partition stage at all as of r7
     "x_theta_audience_overlap",  # theta path (2) + one-pass exact side (2) + broadcast combine; all frames past the user shuffle are 1-row
     "x_rolling_mau_sketch",   # daily sketch agg + spine + exact-harness distinct + verdict join; production path alone is 2

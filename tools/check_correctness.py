@@ -12,6 +12,7 @@ from __future__ import annotations
 import argparse
 import math
 import os
+import re
 import sys
 import time
 
@@ -49,13 +50,21 @@ def table_hash(rows, colnames):
     return h.hexdigest()[:16]
 
 
+_REGISTERED = re.compile(r'\bregister(?:_sql)?\(\s*"([^"]+)"')
+
+
+def registered_names(source: str) -> set[str]:
+    """Query names a module's source registers: the literal first
+    argument of every ``register("name"`` and ``register_sql("name"``
+    call (registrations are multi-line, so this reads whole file
+    contents rather than grepping lines)."""
+    return set(_REGISTERED.findall(source))
+
+
 def _names_new_since(rev: str, registry) -> list[str]:
     """Registry names present now but NOT registered at git ``rev``:
-    scans every tracked .py at the rev for literal register("name")
-    first-args (registrations are multi-line, so this reads file
-    contents rather than line-grepping). Names are returned in current
-    registry order."""
-    import re
+    scans every tracked .py at the rev with ``registered_names``. Names
+    are returned in current registry order."""
     import subprocess
 
     ls = subprocess.run(
@@ -65,7 +74,6 @@ def _names_new_since(rev: str, registry) -> list[str]:
         check=True,
     )
     old: set[str] = set()
-    pat = re.compile(r'register\(\s*"([^"]+)"')
     for path in ls.stdout.split():
         if not path.endswith(".py"):
             continue
@@ -75,7 +83,7 @@ def _names_new_since(rev: str, registry) -> list[str]:
             text=True,
         )
         if show.returncode == 0:
-            old.update(pat.findall(show.stdout))
+            old.update(registered_names(show.stdout))
     return [n for n in registry if n not in old]
 
 
