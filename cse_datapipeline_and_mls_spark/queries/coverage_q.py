@@ -8,6 +8,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, release
 from ..operators.asof import asof_join
 from ..sources import load_table
 from . import register, register_sql
@@ -1121,6 +1122,19 @@ def _pagerank_oracle(iters: int = 6, damping: float = 0.85) -> str:
     return sql
 
 
+def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct customer→supplier purchase edges (orders ⋈ lineitem),
+    the graph the supplier PageRank/HITS rows analyze. Customer ids are
+    NEGATED to keep the two key spaces apart."""
+    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
+    return (
+        o.join(li, o["o_orderkey"] == li["l_orderkey"])
+        .select((-F.col("o_custkey")).alias("src"), F.col("l_suppkey").alias("dst"))
+        .distinct()
+    )
+
+
 @register("x_pagerank_suppliers", oracle=_pagerank_oracle(iters=6))
 def x_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Supplier importance via PageRank on the customer→supplier
@@ -1139,16 +1153,7 @@ def x_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiebreak so both engines cut the same boundary."""
     from ..operators.graph import pagerank
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (-F.col("o_custkey")).alias("src"),
-            F.col("l_suppkey").alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     pr = pagerank(edges, iters=6)
     return (
         pr.filter(F.col("node") > 0)
@@ -1285,7 +1290,9 @@ def _drop_copurchase_artifacts(spark: SparkSession, sf_dir: str) -> None:
     import hashlib
     import re
 
-    _TRI_STATS_MEMO.pop((spark.sparkContext.applicationId, sf_dir.rstrip("/")), None)
+    stats = _TRI_STATS_MEMO.pop((spark.sparkContext.applicationId, sf_dir.rstrip("/")), None)
+    if stats is not None:
+        release(stats)
     root = sf_dir.rstrip("/")
     table = (
         "copur_edges_b_"
@@ -1325,6 +1332,9 @@ def _copurchase_tri_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count(F.lit(1)).cast("long").alias("degree"))
     )
     tc = triangle_counts(edges, src="a", dst="b", assume_canonical=True)
+    # A raw checkpoint, not ``materialize``: the memo is a declared
+    # session fixture that must outlive the query_scope of the row that
+    # built it; _drop_copurchase_artifacts releases it.
     stats = (
         tc.join(deg, "node")
         .select("node", "degree", F.col("triangles").cast("long").alias("triangles"))
@@ -2501,13 +2511,7 @@ def x_pagerank_personalized(spark: SparkSession, sf_dir: str) -> DataFrame:
     teleport/dangling mass restarting at the seeds."""
     from ..operators.graph import personalized_pagerank
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    base = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select((-F.col("o_custkey")).alias("src"), F.col("l_suppkey").alias("dst"))
-        .distinct()
-    )
+    base = _purchase_edges(spark, sf_dir)
     edges = base.unionByName(
         base.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )
@@ -2592,6 +2596,27 @@ def agg_hhi_market_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def copurchase_edges(li: DataFrame, min_support: int = 2) -> DataFrame:
+    """The part co-purchase graph's edge list (src < dst): part pairs
+    bought together in at least ``min_support`` distinct orders. The
+    default 2 is the repeat layer, the sparse signal-bearing graph the
+    k-core/LPA/BFS/WL/link-prediction rows analyze (the same guard
+    posture as x_association_rules: never the raw quadratic basket
+    explode at scale). Lazy: a row that reads it more than once
+    materializes it."""
+    bk = li.select("l_orderkey", "l_partkey").distinct()
+    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
+    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
+    return (
+        a.join(b, "k")
+        .filter(F.col("src") < F.col("dst"))
+        .groupBy("src", "dst")
+        .agg(F.count(F.lit(1)).alias("n"))
+        .filter(F.col("n") >= min_support)
+        .select("src", "dst")
+    )
+
+
 def _kcore_oracle(k: int, rounds: int) -> str:
     """Unrolled peeling twin for graph.k_core's capped-round contract:
     exactly ``rounds`` degree-filter-semijoin blocks, then the converged
@@ -2647,18 +2672,7 @@ def x_kcore_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale)."""
     from ..operators.graph import k_core
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     kc = k_core(edges, k=2, max_rounds=10)
     return kc.select(
         F.col("node").cast("long").alias("node"),
@@ -2728,18 +2742,7 @@ def x_label_propagation_communities(spark: SparkSession, sf_dir: str) -> DataFra
     graph the sparse signal-bearing layer, as in x_kcore_copurchase."""
     from ..operators.graph import label_propagation
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     com = label_propagation(edges, rounds=4)
     return com.select(
         F.col("node").cast("long").alias("node"),
@@ -2795,18 +2798,7 @@ def x_adamic_adar_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-50 cut selects identical rows on both engines."""
     from ..operators.graph import adamic_adar
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     aa = adamic_adar(edges, center_deg_cap=64)
     return (
         aa.select(
@@ -2868,16 +2860,7 @@ def x_hits_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the ROUNDED score with suppkey tiebreak."""
     from ..operators.graph import hits
 
-    o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
-    edges = (
-        o.join(li, o["o_orderkey"] == li["l_orderkey"])
-        .select(
-            (-F.col("o_custkey")).alias("src"),
-            F.col("l_suppkey").alias("dst"),
-        )
-        .distinct()
-    )
+    edges = _purchase_edges(spark, sf_dir)
     hs = hits(edges, iters=4)
     return (
         hs.filter(F.col("node") > 0)
@@ -2968,20 +2951,8 @@ def x_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULL rather than a division error on both engines."""
     from ..operators.graph import degree_assortativity
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-        # one materialization for the degree agg + the degree join
-        .localCheckpoint(eager=True)
-    )
+    # one materialization for the degree agg + the degree join
+    edges = materialize(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
     r = degree_assortativity(edges)
     return r.select(
         "n_edges", _q6(F.col("assortativity")).alias("assortativity")
@@ -3043,18 +3014,8 @@ def x_bfs_hops_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     x_kcore_copurchase."""
     from ..operators.graph import bfs_hops
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    # materialized once: the seeds and the BFS edge set both read it
+    edges = materialize(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -3192,18 +3153,7 @@ def x_wl_refinement_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     graph the sparse signal-bearing layer."""
     from ..operators.graph import wl_refinement
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     labels = wl_refinement(edges, rounds=2)
     w = Window.partitionBy("wl_label")
     return (
@@ -3260,18 +3210,7 @@ def x_jaccard_links(spark: SparkSession, sf_dir: str) -> DataFrame:
     doubles."""
     from ..operators.graph import jaccard_links
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     jl = jaccard_links(edges, center_deg_cap=64)
     return (
         jl.select(
@@ -3313,18 +3252,7 @@ def x_degree_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     (graph.degree_distribution)."""
     from ..operators.graph import degree_distribution
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-    )
+    edges = copurchase_edges(load_table(spark, sf_dir, "lineitem"))
     return degree_distribution(edges).orderBy("degree")
 
 
@@ -3444,15 +3372,7 @@ def x_katz_copurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     lines per order, same guard note as x_triangle_copurchase."""
     from ..operators.graph import katz_centrality
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    half = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .select("src", "dst")
-        .distinct()
-    )
+    half = copurchase_edges(load_table(spark, sf_dir, "lineitem"), min_support=1)
     edges = half.unionByName(
         half.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
     )

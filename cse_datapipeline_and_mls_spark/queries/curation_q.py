@@ -14,11 +14,12 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from ..operators import dedup as D
 from ..operators.numeric import q6 as _q6
 from ..sources import load_table
 from . import register, register_sql
-from .coverage_q import _lpa_ctes
+from .coverage_q import _lpa_ctes, copurchase_edges
 
 
 # Per-domain document cap: keep at most K=20 documents per source,
@@ -228,28 +229,16 @@ def x_graph_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     hash-stable — and the only float math is one final expression.
 
     Scale: labels come from the capped-round LPA operator (node-keyed
-    joins, localCheckpoint lineage truncation); the modularity operator
+    joins, rounds materialized by ``fixpoint``); the modularity operator
     (operators/graph.modularity) adds two node-keyed label joins on the
     edge list, a degree agg, and two per-community sums — all
     co-partitioned on a cluster, nothing quadratic. The 1-row
     edge-count side is broadcast."""
     from ..operators.graph import label_propagation, modularity
 
-    li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
-    bk = li.distinct()
-    a = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("src"))
-    b = bk.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("dst"))
-    edges = (
-        a.join(b, "k")
-        .filter(F.col("src") < F.col("dst"))
-        .groupBy("src", "dst")
-        .agg(F.count(F.lit(1)).alias("n"))
-        .filter(F.col("n") >= 2)
-        .select("src", "dst")
-        # materialize once: the basket self-join feeds FOUR consumers
-        # (LPA + modularity's e2/deg/m) and would re-derive per consumer
-        .localCheckpoint(eager=True)
-    )
+    # materialize once: the basket self-join feeds FOUR consumers
+    # (LPA + modularity's e2/deg/m) and would re-derive per consumer
+    edges = materialize(copurchase_edges(load_table(spark, sf_dir, "lineitem")))
     lab = label_propagation(edges, rounds=4)
     q = modularity(edges, lab)
     return q.select(

@@ -19,3 +19,18 @@ def spark():
 @pytest.fixture(scope="session")
 def sf_dir():
     return "/root/testdata/sf0.001"
+
+
+@pytest.fixture
+def persistent_ids(spark):
+    """A function returning the ids of the session's persistent RDDs now.
+    Leak checks compare ids, not counts: earlier tests' blocks unpersist
+    asynchronously, so a count can drop while a test runs."""
+
+    def ids() -> set:
+        return {
+            int(k)
+            for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
+        }
+
+    return ids

@@ -42,18 +42,11 @@ def test_production_legs_are_headline_rows():
     assert legs <= set(bench.HEADLINE), legs - set(bench.HEADLINE)
 
 
-def test_item_recs_leg_releases_its_checkpoints(spark, sf_dir):
+def test_item_recs_leg_releases_its_checkpoints(spark, sf_dir, persistent_ids):
     """The item-recs production leg pins its corpus state (DISK_ONLY
     local checkpoints) across its timed runs; its ``release`` must drop
     every persistent RDD the leg made, or the blocks outlive the leg for
     the rest of the sweep. Compared by RDD ID, as in test_graph.py."""
-
-    def persistent_ids() -> set:
-        return {
-            int(k)
-            for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-        }
-
     before = persistent_ids()
     leg = bench._production_legs()["ml_item_recs_incremental"]
     for _ in range(2):

@@ -285,7 +285,7 @@ def test_pagerank_warm_start_converges_faster_after_perturbation(spark):
     assert l1(warm) < l1(cold), (l1(warm), l1(cold))
 
 
-def test_pagerank_empty_graph_releases_persist(spark):
+def test_pagerank_empty_graph_releases_persist(spark, persistent_ids):
     """ADVICE r5: the empty-graph early return on the persist path must
     unpersist the edge cache, not leave a catalog-held entry per call.
     Compared by RDD ID, not catalog SIZE: earlier tests' caches
@@ -293,12 +293,6 @@ def test_pagerank_empty_graph_releases_persist(spark):
     this test runs (r14 close saw 52 → 44) — the invariant is that no
     NEW entry created by this call survives it."""
     from cse_datapipeline_and_mls_spark.operators.graph import pagerank
-
-    def persistent_ids() -> set:
-        return {
-            int(k)
-            for k in spark.sparkContext._jsc.getPersistentRDDs().keySet().toArray()
-        }
 
     before = persistent_ids()
     empty = spark.createDataFrame([], "src long, dst long")
@@ -650,3 +644,84 @@ def test_katz_iters_guard(spark):
         katz_centrality(df, iters=0)
     with pytest.raises(ValueError):
         katz_centrality(df, alpha_inv=1)
+
+
+# -- materialization ownership -------------------------------------------
+
+
+def test_k_core_holds_one_round_of_state(spark, persistent_ids):
+    """fixpoint frees the round each round replaces: on a long path,
+    k_core(k=2) peels two nodes a round and never converges within the
+    cap, yet holds the same number of persistent RDDs (counted with the
+    scope still open) after 3 rounds as after 8."""
+    from cse_datapipeline_and_mls_spark.materialize import query_scope
+    from cse_datapipeline_and_mls_spark.operators.graph import k_core
+
+    path = spark.createDataFrame([(i, i + 1) for i in range(40)], "src long, dst long")
+    held = {}
+    for rounds in (3, 8):
+        before = persistent_ids()
+        with query_scope():
+            out = k_core(path, k=2, max_rounds=rounds)
+            assert out.filter("converged").count() == 0
+            held[rounds] = len(persistent_ids() - before)
+        assert not persistent_ids() - before
+    assert held[3] == held[8] > 0, held
+
+
+def _graph_rows() -> list[str]:
+    """Registry rows that call an operators/graph.py operator, directly
+    or through the shared triangle-stats frame."""
+    import inspect
+
+    from cse_datapipeline_and_mls_spark.queries import QUERIES
+
+    return [
+        name
+        for name, fn in QUERIES.items()
+        if "operators.graph import" in inspect.getsource(fn)
+        or "_copurchase_tri_stats(" in inspect.getsource(fn)
+    ]
+
+
+def test_graph_rows_leave_no_persistent_rdds(spark, sf_dir, persistent_ids):
+    """Every graph row, built and noop-written inside query_scope(),
+    leaves no persistent RDD behind once the scope exits. The triangle
+    rows may keep only their declared session fixture, the memoized
+    stats frame."""
+    from cse_datapipeline_and_mls_spark.materialize import query_scope
+    from cse_datapipeline_and_mls_spark.queries import QUERIES
+    from cse_datapipeline_and_mls_spark.queries.coverage_q import _TRI_STATS_MEMO
+
+    names = _graph_rows()
+    assert len(names) == 17, names  # stale scan guard
+    leaks = {}
+    for name in names:
+        before = persistent_ids()
+        with query_scope():
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+        memo = {
+            df._jdf.queryExecution().analyzed().rdd().id() for df in _TRI_STATS_MEMO.values()
+        }
+        left = persistent_ids() - before - memo
+        if left:
+            leaks[name] = left
+    assert not leaks, f"graph rows left persistent RDDs: {leaks}"
+
+
+def test_dropping_tri_stats_memo_releases_its_blocks(spark, sf_dir, persistent_ids):
+    """_drop_copurchase_artifacts forgets the memoized triangle stats
+    AND frees its DISK_ONLY checkpoint, so a cold rebuild does not pin
+    one more stats frame per call."""
+    from cse_datapipeline_and_mls_spark.queries.coverage_q import (
+        _copurchase_tri_stats,
+        _drop_copurchase_artifacts,
+    )
+
+    _drop_copurchase_artifacts(spark, sf_dir)
+    before = persistent_ids()
+    stats = _copurchase_tri_stats(spark, sf_dir)
+    memo_id = stats._jdf.queryExecution().analyzed().rdd().id()
+    assert memo_id in persistent_ids() - before
+    _drop_copurchase_artifacts(spark, sf_dir)
+    assert memo_id not in persistent_ids()

@@ -41,7 +41,6 @@ EXPECTED_CROSS = {
     # main multi-distinct agg HashAggregates instead of sort-aggregating
     # the 4x-expanded fact table (string agg buffers force SortAggregate)
     "profile_lineitem",
-    "x_pagerank_suppliers",   # 1-row dangling-mass broadcast per iteration (graph.pagerank)
     "x_bm25_search",          # 1-row (n_docs, avgdl) scalar broadcast (search.bm25_topk)
     "x_hybrid_search_rrf",    # same scalar broadcast inside the BM25 leg
     "x_theta_audience_overlap",  # 1-row estimate frame broadcast onto the 1-row exact frame
@@ -56,8 +55,6 @@ EXPECTED_CROSS = {
     "x_ann_ivf_kmeans_topk",
     "x_ann_pq_topk",
     "x_minhash_incremental",
-    "x_pagerank_bucketed_edges",  # 1-row dangling-mass broadcast per iteration
-    "x_pagerank_personalized",    # same 1-row dangling-mass broadcast per iteration (graph.personalized_pagerank)
     # r7: assign_dense_ids' prefix-sum offsets are a theta self-join on
     # the per-partition counts frame (rows = #partitions) — the
     # deliberate replacement for the folded-away unpartitioned window
@@ -129,7 +126,6 @@ EXPECTED_CROSS = {
 EXPECTED_MANY_EXCHANGES = {
     "x_bigram_lm_score",  # bigram counts + context counts + model join + per-doc agg (SCALE.md)
     "x_bigram_lm_score_pruned",  # same model-build aggs + TakeOrdered top-M; corpus side joins broadcast-only
-    "x_pagerank_suppliers",  # power iteration: 3 exchanges x 6 iterations is the algorithm, not a plan bug
     "x_data_quality_checks",  # 1 fused row-level scan + unique groupBy + anti-join + result union (expectations.py)
     "t_funnel_3step",         # 3 stage aggs + 2 stage joins, ALL keyed on user_id — exchange-free on a user-bucketed table (comment above its SQL, coverage_q.py)
     "x_dense_ids_documents",  # range exchange + pid counts + offsets theta-join + pid-clustered window; no single-partition stage at all as of r7
@@ -139,11 +135,9 @@ EXPECTED_MANY_EXCHANGES = {
     "x_ann_lsh_topk",         # exact brute-force side + LSH candidate join + verdict aggs (bracket-verdict form)
     "x_ann_ivf_kmeans_topk",  # exact side + probe-cell join + verdict aggs
     "x_ann_pq_topk",          # exact side + ADC candidate shuffle + verdict aggs
-    "x_pagerank_bucketed_edges",  # power iteration exchanges, same as x_pagerank_suppliers
     "x_minhash_incremental",  # exact shingle-join side + LSH probe joins + verdict aggs (bracket-verdict form)
     "t_cox_proportional_hazards",  # cohort build + duration spine + 8 Newton rounds, each ONE exchange on the tiny checkpointed risk frame — the fit's irreducible iteration, every post-cohort frame spine-sized
     "x_association_rules",    # basket dedup + item/pair/meta aggs + 2 rule-stat joins; every frame past the pair count is ≤ |rules| rows
-    "x_pagerank_personalized",  # power iteration over the undirected graph: 2-3 exchanges x 6 iterations is the algorithm
     "x_hits_suppliers",       # 2 node-keyed joins x 4 iterations past the checkpoints is the algorithm
     "x_hits_bucketed_edges",  # same iteration exchanges from the persisted bucketed layout (fewer per iteration; dst-twin build adds one)
     "x_graph_modularity",     # past the checkpointed edge build: 2 label joins + degree agg + per-community sums + 3 1-row aggs
@@ -222,6 +216,7 @@ def main() -> int:
             baseline = json.load(f)
     recorded = {}
 
+    from cse_datapipeline_and_mls_spark.materialize import query_scope
     from cse_datapipeline_and_mls_spark.queries import QUERIES
     from cse_datapipeline_and_mls_spark.session import get_spark
 
@@ -230,8 +225,11 @@ def main() -> int:
     flags_total = 0
     for name in names:
         try:
-            df = QUERIES[name](spark, args.sf)
-            plan = df._jdf.queryExecution().executedPlan().toString()
+            # the build's eager materializations are freed once the plan
+            # string is read
+            with query_scope():
+                df = QUERIES[name](spark, args.sf)
+                plan = df._jdf.queryExecution().executedPlan().toString()
         except Exception as e:  # noqa: BLE001
             print(f"ERR   {name}: {e}")
             flags_total += 1

@@ -115,6 +115,7 @@ def main() -> int:
 
     import duckdb
 
+    from cse_datapipeline_and_mls_spark.materialize import query_scope
     from cse_datapipeline_and_mls_spark.queries import ORACLE, QUERIES
 
     if args.new_since:
@@ -175,10 +176,11 @@ def main() -> int:
             except Exception:  # noqa: BLE001
                 pass
         try:
-            sdf = fn(spark, args.sf)
-            scols = sdf.columns
-            srows = [tuple(r) for r in sdf.collect()]
-            del sdf
+            with query_scope():
+                sdf = fn(spark, args.sf)
+                scols = sdf.columns
+                srows = [tuple(r) for r in sdf.collect()]
+                del sdf
         except Exception as e:  # noqa: BLE001
             print(f"FAIL  {name}: spark error: {e}")
             record(name, err=f"spark error: {e}")

@@ -38,6 +38,7 @@ def run_with_watchdog(spark, name: str, sf_dir: str, cap: float, label: str) -> 
     """Run registry query ``name`` on ``sf_dir`` through the noop sink
     under its own job group, print one OK/TIMEOUT/ERROR line, and return
     its seconds (or ``"TIMEOUT@<s>s"`` / ``"ERROR@<s>s"``)."""
+    from cse_datapipeline_and_mls_spark.materialize import query_scope
     from cse_datapipeline_and_mls_spark.queries import QUERIES
 
     sc = spark.sparkContext
@@ -65,8 +66,9 @@ def run_with_watchdog(spark, name: str, sf_dir: str, cap: float, label: str) -> 
     w.start()
     t0 = time.time()
     try:
-        QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        dt = round(time.time() - t0, 1)
+        with query_scope():
+            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
+            dt = round(time.time() - t0, 1)
         note = " (watchdog fired but query completed)" if cancelled.is_set() else ""
         print(f"OK      {name} @ {sf_dir}: {dt}s{note}", flush=True)
         return dt
