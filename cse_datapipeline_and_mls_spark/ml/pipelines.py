@@ -30,6 +30,7 @@ from pyspark.ml.regression import GBTRegressor
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, query_scope
 from ..operators import relational as R
 from ..operators import tswindow as TS
 
@@ -208,26 +209,26 @@ def rolling_origin_search(
     qs = df.select(F.unix_timestamp(F.col(ts_col)).cast("double").alias("_e")).approxQuantile(
         "_e", probs, 0.001
     )
-    with_e = df.withColumn("_e", F.unix_timestamp(F.col(ts_col)).cast("double")).cache()
     evaluator = RegressionEvaluator(
         labelCol=label_col, predictionCol="prediction", metricName=metric
     )
     log: list[dict] = []
-    for params in param_grid:
-        scores = []
-        for i in range(n_folds):
-            train = with_e.filter(F.col("_e") <= qs[i])
-            valid = with_e.filter((F.col("_e") > qs[i]) & (F.col("_e") <= qs[i + 1]))
-            if not valid.head(1):
-                continue
-            model = build_pipeline(**params).fit(train)
-            scores.append(evaluator.evaluate(model.transform(valid)))
-        avg = sum(scores) / len(scores) if scores else float("inf")
-        log.append({"params": params, "folds": scores, "avg": avg})
-    lower_is_better = metric in ("rmse", "mse", "mae")
-    best = min(log, key=lambda r: r["avg"]) if lower_is_better else max(log, key=lambda r: r["avg"])
-    best_model = build_pipeline(**best["params"]).fit(with_e)
-    with_e.unpersist()
+    with query_scope():
+        with_e = materialize(df.withColumn("_e", F.unix_timestamp(F.col(ts_col)).cast("double")))
+        for params in param_grid:
+            scores = []
+            for i in range(n_folds):
+                train = with_e.filter(F.col("_e") <= qs[i])
+                valid = with_e.filter((F.col("_e") > qs[i]) & (F.col("_e") <= qs[i + 1]))
+                if not valid.head(1):
+                    continue
+                model = build_pipeline(**params).fit(train)
+                scores.append(evaluator.evaluate(model.transform(valid)))
+            avg = sum(scores) / len(scores) if scores else float("inf")
+            log.append({"params": params, "folds": scores, "avg": avg})
+        lower_is_better = metric in ("rmse", "mse", "mae")
+        best = min(log, key=lambda r: r["avg"]) if lower_is_better else max(log, key=lambda r: r["avg"])
+        best_model = build_pipeline(**best["params"]).fit(with_e)
     return best["params"], best_model, log
 
 

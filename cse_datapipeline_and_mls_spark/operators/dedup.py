@@ -16,10 +16,11 @@ Near-dup comes in three flavors with different scale/quality trade-offs:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import fixpoint, materialize, release
 from .numeric import q6
 from .relational import dedup_by_key  # re-export: exact dedup lives there
 
@@ -163,9 +164,7 @@ def minhash_neardup_pairs(
     # pipeline per side (plus the fit's probe) — three corpus passes.
     # Pre-transform and materialize; the join then reads the narrow
     # (id, features, hashes) table twice from the checkpoint.
-    keyed = model.transform(feats).select(id_col, "features", "hashes").localCheckpoint(
-        eager=True
-    )
+    keyed = materialize(model.transform(feats).select(id_col, "features", "hashes"))
     pairs = model.approxSimilarityJoin(keyed, keyed, 1.0 - jaccard_threshold, distCol="jaccard_dist")
     return (
         pairs.select(
@@ -301,9 +300,11 @@ def simhash_neardup_pairs(
         # self-join on one task; no-op when sig is already spread
         sh = _ensure_min_parallelism(sig.select(id_col, "simhash"))
     else:
-        sh = with_simhash(
-            _ensure_min_parallelism(df.select(id_col, text_col)), text_col
-        ).select(id_col, "simhash").localCheckpoint(eager=True)
+        sh = materialize(
+            with_simhash(_ensure_min_parallelism(df.select(id_col, text_col)), text_col).select(
+                id_col, "simhash"
+            )
+        )
     band_bits = 64 // n_bands
     mask = (1 << band_bits) - 1
     bands = sh.select(
@@ -387,10 +388,9 @@ def ngram_jaccard_pairs(
     sh = shingle(
         _ensure_min_parallelism(df.select(id_col, text_col)), text_col, n=n
     ).filter(F.size("shingles") > 0)
-    ex = (
+    ex = materialize(
         sh.select(id_col, F.size("shingles").alias("sz"), F.explode("shingles").alias("_g"))
         .select(id_col, "sz", F.xxhash64("_g").alias("g"))
-        .localCheckpoint(eager=True)
     )
     a = ex.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"), "g")
     b = ex.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"), "g")
@@ -464,10 +464,9 @@ def ngram_containment_self_pairs(
     sh = shingle(
         _ensure_min_parallelism(df.select(id_col, text_col)), text_col, n=n
     ).filter(F.size("shingles") > 0)
-    ex = (
+    ex = materialize(
         sh.select(id_col, F.size("shingles").alias("sz"), F.explode("shingles").alias("_g"))
         .select(id_col, "sz", F.xxhash64("_g").alias("g"))
-        .localCheckpoint(eager=True)
     )
     a = ex.select(F.col(id_col).alias("id_a"), F.col("sz").alias("sz_a"), "g")
     b = ex.select(F.col(id_col).alias("id_b"), F.col("sz").alias("sz_b"), "g")
@@ -559,9 +558,10 @@ def connected_components(
     of its own label and its neighbors' labels; converges in O(graph
     diameter) rounds — near-dup graphs are shallow (chains of 2-4), so
     3-5 rounds in practice. Per round: one shuffle join (messages) + one
-    shuffle agg (min per node). The edge list is cached (reused every
-    round) and labels are localCheckpoint'ed to truncate lineage — an
-    iterative plan otherwise grows exponentially in Catalyst. At
+    shuffle agg (min per node). The edge list is materialized once
+    (reused every round) and each round's labels are materialized, the
+    round they replace freed, to truncate lineage — an iterative plan
+    otherwise grows exponentially in Catalyst. At
     trillion-edge scale swap this for the large-star/small-star
     alternation (Kiveris et al., "Connected Components in MapReduce"),
     which bounds rounds by log(n) with the same DataFrame primitives.
@@ -625,7 +625,7 @@ def connected_components(
                 f"connected_components: endpoint types differ ({s_t} vs {d_t}); "
                 "cast them to one type first"
             )
-    canon = (
+    canon = materialize(
         canon
         # a NULL endpoint carries no identity: the iterative path's
         # join semantics would silently strand it and the union-find
@@ -633,7 +633,6 @@ def connected_components(
         # drop such rows explicitly, same stance as triangle_counts
         .filter(F.col("src").isNotNull() & F.col("dst").isNotNull())
         .distinct()
-        .localCheckpoint()
     )
     global _LAST_CC_ROUNDS
     if small_graph_max_edges:
@@ -643,10 +642,8 @@ def connected_components(
         if probed <= small_graph_max_edges:
             _LAST_CC_ROUNDS = 0
             return _cc_union_find(canon)
-    edges = (
-        canon.union(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst")))
-        .distinct()
-        .cache()
+    edges = materialize(
+        canon.union(canon.select(F.col("dst").alias("src"), F.col("src").alias("dst"))).distinct()
     )
     labels = (
         edges.select(F.col("src").alias("node"))
@@ -659,7 +656,7 @@ def connected_components(
             "node",
             F.least(F.col("node"), F.coalesce("_prev", F.col("node"))).alias("label"),
         )
-    labels = labels.localCheckpoint()
+    labels = materialize(labels)
     _LAST_CC_ROUNDS = 0
     converged = False
     for _ in range(max_iter):
@@ -669,25 +666,22 @@ def connected_components(
             .groupBy("node")
             .agg(F.min("nbr_label").alias("nbr_label"))
         )
-        new_labels = (
-            labels.withColumnRenamed("label", "old_label")
-            .join(msgs, "node", "left")
-            .select(
-                "node",
-                F.least(
-                    F.col("old_label"), F.coalesce("nbr_label", F.col("old_label"))
-                ).alias("label"),
-                "old_label",
-            )
-            .localCheckpoint()
+        new = F.least(F.col("label"), F.coalesce("nbr_label", F.col("label")))
+        # the changed-label count rides on the job that materializes the
+        # round; the round it replaces is freed
+        obs = Observation()
+        nxt = materialize(
+            labels.join(msgs, "node", "left")
+            .observe(obs, F.count(F.when(new != F.col("label"), 1)).alias("changed"))
+            .select("node", new.alias("label"))
         )
-        changed = new_labels.filter(F.col("label") != F.col("old_label")).limit(1).count()
-        labels = new_labels.drop("old_label")
+        release(labels)
+        labels = nxt
         _LAST_CC_ROUNDS += 1
-        if changed == 0:
+        if obs.get["changed"] == 0:
             converged = True
             break
-    edges.unpersist()
+    release(edges)
     if not converged:
         # A silent early exit would split one component into several and
         # leave duplicate survivors downstream — fail loudly instead.
@@ -722,7 +716,8 @@ def connected_components_star(
     fewer rounds on deep graphs.
 
     Convergence check is a cheap order-insensitive edge-set checksum
-    (sum of per-edge hashes, one scalar) instead of a full set compare.
+    (sum of per-edge hashes, one scalar, plus the edge count) instead of
+    a full set compare, observed on the job that materializes each round.
     """
 
     def large_star(e: DataFrame) -> DataFrame:
@@ -752,38 +747,25 @@ def connected_components_star(
             .distinct()
         )
 
-    def checksum(e: DataFrame):
-        # decimal(38,0) accumulator: a long sum of 64-bit hashes overflows
-        # under ANSI mode after a handful of rows
-        row = e.agg(
-            F.coalesce(
-                F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)
-            ).alias("c"),
-            F.count(F.lit(1)).alias("n"),
-        ).collect()[0]
-        return (row["c"], row["n"])
-
-    edges = (
+    # decimal(38,0) accumulator: a long sum of 64-bit hashes overflows
+    # under ANSI mode after a handful of rows
+    checksum = F.struct(
+        F.coalesce(F.sum(F.xxhash64("src", "dst").cast("decimal(38,0)")), F.lit(0)),
+        F.count(F.lit(1)),
+    )
+    edges = materialize(
         pairs.select(F.col(src).alias("src"), F.col(dst).alias("dst"))
         .filter(F.col("src") != F.col("dst"))
         .distinct()
-        .localCheckpoint()
     )
-    all_nodes = (
+    all_nodes = materialize(
         edges.select(F.col("src").alias("node"))
         .union(edges.select(F.col("dst").alias("node")))
         .distinct()
-        .localCheckpoint()
     )
-    prev = checksum(edges)
-    converged = False
-    for _ in range(max_iter):
-        edges = small_star(large_star(edges)).localCheckpoint()
-        cur = checksum(edges)
-        if cur == prev:
-            converged = True
-            break
-        prev = cur
+    edges, converged = fixpoint(
+        edges, lambda e, r: small_star(large_star(e)), max_iter, until=checksum
+    )
     if not converged:
         raise RuntimeError(
             f"connected_components_star did not converge in {max_iter} rounds"
@@ -915,9 +897,7 @@ def minhash_neardup_incremental(
     # shingle+TF+MinHash passes when left untransformed (the join
     # transforms any input missing the hashes column). The corpus side
     # is read once, so it stays lazy.
-    bkeyed = model.transform(bf).select(id_col, "features", "hashes").localCheckpoint(
-        eager=True
-    )
+    bkeyed = materialize(model.transform(bf).select(id_col, "features", "hashes"))
     cross = model.approxSimilarityJoin(bkeyed, cf, thresh, distCol="jaccard_dist")
     intra = model.approxSimilarityJoin(bkeyed, bkeyed, thresh, distCol="jaccard_dist")
 
@@ -1002,7 +982,7 @@ def simhash_neardup_incremental(
             ).alias("band"),
         ).select(id_col, "simhash", "band.band_idx", "band.band_val")
 
-    bb = bands(batch, batch_sig).localCheckpoint(eager=True)
+    bb = materialize(bands(batch, batch_sig))
     cb = bands(corpus, corpus_sig)
     a = bb.select(
         F.col(id_col).alias("id_a"), F.col("simhash").alias("sim_a"),

@@ -33,7 +33,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from ..materialize import fixpoint, materialize, release
+from ..materialize import counted, fixpoint, materialize, release
 
 # Partition count of the most recent pagerank() edge materialization —
 # a test observable (see the comment at the assignment site).
@@ -159,7 +159,6 @@ def pagerank(
     damping: float = 0.85,
     checkpoint_every: int = 2,
     pre_partitioned: bool = False,
-    edge_storage: str | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Power-iteration PageRank over a directed edge list. Returns
@@ -208,109 +207,103 @@ def pagerank(
     )
     # Two edge-materialization modes, measured at sf0.1 local[32]:
     #
-    # "checkpoint" (default for in-session edge frames): localCheckpoint
-    #   stores raw rows and re-scans them for free, BUT its LogicalRDD
-    #   drops outputPartitioning, so every iteration's rank join
-    #   re-shuffles the edge table on src (one extra ENSURE_REQUIREMENTS
-    #   exchange per iteration). In LOCAL mode that shuffle is a cheap
-    #   disk spill and this path wins: 5.2 s vs 8.4 s.
+    # In-session edge frames: a local checkpoint stores raw rows and
+    #   re-scans them for free, BUT its LogicalRDD drops
+    #   outputPartitioning, so every iteration's rank join re-shuffles
+    #   the edge table on src (one extra ENSURE_REQUIREMENTS exchange
+    #   per iteration). In LOCAL mode that shuffle is a cheap disk spill
+    #   and this path wins: 5.2 s vs 8.4 s.
     #
-    # "persist" (default when pre_partitioned, i.e. a bucketed layout):
-    #   InMemoryRelation preserves the cached plan's HashPartitioning
-    #   (the repartition above, or the bucket layout), so the
+    # pre_partitioned (a bucketed layout): a persist, whose
+    #   InMemoryRelation preserves the input's HashPartitioning, so the
     #   per-iteration edge-side exchange DISAPPEARS — only the
     #   partial-aggregated contribution shuffle and (at most) the
     #   |V|-sized state shuffle remain (asserted via
     #   _LAST_ITER_EXCHANGES in tests/test_graph).
     #   Locally the columnar decode per iteration costs more than the
     #   shuffle it saves; on a 1000-executor cluster the saved exchange
-    #   is |E| over the NETWORK per iteration, which dominates — use
-    #   "persist" (plus a src-bucketed edge table) at cluster scale.
-    if edge_storage is None:
-        edge_storage = "persist" if pre_partitioned else "checkpoint"
-    if edge_storage == "persist":
+    #   is |E| over the NETWORK per iteration, which dominates — use a
+    #   src-bucketed edge table at cluster scale. A raw persist, not
+    #   ``materialize``: a local checkpoint would drop the very
+    #   partitioning this path keeps. The ``finally`` below frees it.
+    if pre_partitioned:
         e = pre.persist()
         e.count()
     else:
         e = materialize(pre)
-    # Observable for the regression test: the materialized edge
-    # partition count drives every iteration's task count. If this ever
-    # reads shuffle.partitions (e.g. 200 in a vanilla session) instead
-    # of defaultParallelism, the 15s -> 272s trap is back.
-    global _LAST_EDGE_PARTITIONS
-    _LAST_EDGE_PARTITIONS = e.rdd.getNumPartitions()
-    nodes = _nodes(e)
-    n_nodes = nodes.count()
-    if n_nodes == 0:
-        # Release the edge cache before bailing: on the persist path the
-        # CacheManager entry is catalog-held even for empty data, and a
-        # long-lived session calling pagerank on empty graphs would pin
-        # one entry per call (ADVICE r5).
-        if edge_storage == "persist":
-            e.unpersist()
-        return nodes.withColumn("rank", F.lit(0.0))
+    try:
+        # Observable for the regression test: the materialized edge
+        # partition count drives every iteration's task count. If this ever
+        # reads shuffle.partitions (e.g. 200 in a vanilla session) instead
+        # of defaultParallelism, the 15s -> 272s trap is back.
+        global _LAST_EDGE_PARTITIONS
+        _LAST_EDGE_PARTITIONS = e.rdd.getNumPartitions()
+        nodes = _nodes(e)
+        n_nodes = nodes.count()
+        if n_nodes == 0:
+            return nodes.withColumn("rank", F.lit(0.0))
 
-    out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
-    # degree rides with the rank vector so the per-iteration join is
-    # rank ⋈ edges only
-    base = nodes.join(out_deg, nodes["node"] == out_deg["src"], "left").select(
-        "node", F.coalesce("deg", F.lit(0)).alias("deg")
-    )
-    # fixpoint materializes the initial state, and with it base (|V|
-    # rows: node, deg) (r15): every iteration references the previous
-    # state THREE times (contributions, dangling mass, next state), so
-    # an unmaterialized first segment would re-derive the nodes-distinct
-    # ⋈ out-degree build — two |E|-sized shuffling aggregations — up to
-    # 3^L times. Measured at sf0.1 local[32], interleaved fresh-process
-    # rounds: 7.0-7.8 s → 5.1-5.6 s warm min for the full supplier
-    # query. A local checkpoint, not persist: measured faster locally
-    # (6.1/5.6 s vs 7.4/7.8 s — columnar decode again); the trade it
-    # makes at scale — iteration 0's contribution join may re-shuffle
-    # the |V|-row state once where the lazy plan's partitioning would
-    # have been reused — is |V|-sized and paid once.
-    if init_ranks is None:
-        state = base.withColumn("rank", F.lit(1.0 / n_nodes))
-    else:
-        prev = init_ranks.select(F.col("node"), F.col("rank").alias("_prev"))
-        s0 = (
-            base.join(prev, "node", "left")
-            .withColumn("rank", F.coalesce("_prev", F.lit(1.0 / n_nodes)))
-            .drop("_prev")
+        out_deg = e.groupBy("src").agg(F.count(F.lit(1)).alias("deg"))
+        # degree rides with the rank vector so the per-iteration join is
+        # rank ⋈ edges only
+        base = nodes.join(out_deg, nodes["node"] == out_deg["src"], "left").select(
+            "node", F.coalesce("deg", F.lit(0)).alias("deg")
         )
-        # renormalize to a probability vector (prior ranks of departed
-        # nodes are gone; new nodes injected mass) — one tiny agg
-        total = s0.agg(F.sum("rank").alias("_t"))
-        state = s0.crossJoin(F.broadcast(total)).select(
-            "node", "deg", (F.col("rank") / F.col("_t")).alias("rank")
-        )
-    rank = F.lit((1.0 - damping) / n_nodes) + F.lit(damping) * (
-        F.coalesce("contrib", F.lit(0.0)) + F.col("dm") / n_nodes
-    )
-
-    def step(state: DataFrame, r: int) -> DataFrame:
-        global _LAST_ITER_EXCHANGES
-        if r == 1:
-            # ENSURE_REQUIREMENTS counts only runtime exchanges (the
-            # cached edge build's one-time repartition is tagged
-            # REPARTITION_BY_NUM inside the InMemoryRelation subtree)
-            _LAST_ITER_EXCHANGES = (
-                _contribs(e, state)._jdf.queryExecution()
-                .executedPlan()
-                .toString()
-                .count("ENSURE_REQUIREMENTS")
+        # fixpoint materializes the initial state, and with it base (|V|
+        # rows: node, deg) (r15): every iteration references the previous
+        # state THREE times (contributions, dangling mass, next state), so
+        # an unmaterialized first segment would re-derive the nodes-distinct
+        # ⋈ out-degree build — two |E|-sized shuffling aggregations — up to
+        # 3^L times. Measured at sf0.1 local[32], interleaved fresh-process
+        # rounds: 7.0-7.8 s → 5.1-5.6 s warm min for the full supplier
+        # query. A local checkpoint, not persist: measured faster locally
+        # (6.1/5.6 s vs 7.4/7.8 s — columnar decode again); the trade it
+        # makes at scale — iteration 0's contribution join may re-shuffle
+        # the |V|-row state once where the lazy plan's partitioning would
+        # have been reused — is |V|-sized and paid once.
+        if init_ranks is None:
+            state = base.withColumn("rank", F.lit(1.0 / n_nodes))
+        else:
+            prev = init_ranks.select(F.col("node"), F.col("rank").alias("_prev"))
+            s0 = (
+                base.join(prev, "node", "left")
+                .withColumn("rank", F.coalesce("_prev", F.lit(1.0 / n_nodes)))
+                .drop("_prev")
             )
-        return _power_step(e, state, rank)
+            # renormalize to a probability vector (prior ranks of departed
+            # nodes are gone; new nodes injected mass) — one tiny agg
+            total = s0.agg(F.sum("rank").alias("_t"))
+            state = s0.crossJoin(F.broadcast(total)).select(
+                "node", "deg", (F.col("rank") / F.col("_t")).alias("rank")
+            )
+        rank = F.lit((1.0 - damping) / n_nodes) + F.lit(damping) * (
+            F.coalesce("contrib", F.lit(0.0)) + F.col("dm") / n_nodes
+        )
 
-    state, _ = fixpoint(state, step, iters, every=checkpoint_every)
-    if edge_storage == "persist":
-        # fixpoint materialized the last round, which severs the
-        # returned frame's lineage from the cached edge table; release
-        # it: CacheManager entries are NOT reclaimed by GC (unlike local
-        # checkpoints), so a long-lived session running recurring
-        # PageRank jobs would otherwise accumulate one pinned |E|-sized
-        # cache per run.
-        e.unpersist()
-    return state.select("node", "rank")
+        def step(state: DataFrame, r: int) -> DataFrame:
+            global _LAST_ITER_EXCHANGES
+            if r == 1:
+                # ENSURE_REQUIREMENTS counts only runtime exchanges (the
+                # cached edge build's one-time repartition is tagged
+                # REPARTITION_BY_NUM inside the InMemoryRelation subtree)
+                _LAST_ITER_EXCHANGES = (
+                    _contribs(e, state)._jdf.queryExecution()
+                    .executedPlan()
+                    .toString()
+                    .count("ENSURE_REQUIREMENTS")
+                )
+            return _power_step(e, state, rank)
+
+        state, _ = fixpoint(state, step, iters, every=checkpoint_every)
+        return state.select("node", "rank")
+    finally:
+        # fixpoint materialized the last round, which severs the returned
+        # frame's lineage from the edge frame, so it can be freed here:
+        # CacheManager entries are NOT reclaimed by GC (unlike local
+        # checkpoints), and a long-lived session running recurring
+        # PageRank jobs would otherwise pin one |E|-sized cache per run.
+        if pre_partitioned:
+            e.unpersist()
 
 
 def personalized_pagerank(
@@ -507,7 +500,9 @@ def k_core(
             .select("a", "b")
         )
 
-    cur, converged = fixpoint(_undirected(edges, src, dst), peel, max_rounds, until_stable=True)
+    cur, converged = fixpoint(
+        _undirected(edges, src, dst), peel, max_rounds, until=F.count(F.lit(1))
+    )
     return _degrees(cur, "core_degree").withColumn("converged", F.lit(converged))
 
 
@@ -621,7 +616,6 @@ def hits(
     iters: int = 4,
     checkpoint_every: int = 2,
     pre_partitioned: bool = False,
-    edge_storage: str | None = None,
 ) -> DataFrame:
     """HITS (Kleinberg 1999) hubs-and-authorities over a directed edge
     list, run for EXACTLY ``iters`` synchronized iterations and
@@ -655,10 +649,10 @@ def hits(
     exchange discipline, with edge materialization and
     per-``checkpoint_every`` lineage truncation inherited verbatim.
 
-    ``edge_storage`` / ``pre_partitioned`` follow pagerank's bucketed
-    discipline (VERDICT r7 #3), with a HITS-specific twist: the two
-    per-iteration joins key on DIFFERENT columns (src for the
-    authority update, dst for the hub update), so "persist" caches TWO
+    ``pre_partitioned`` follows pagerank's bucketed edge storage
+    (VERDICT r7 #3), with a HITS-specific twist: the two per-iteration
+    joins key on DIFFERENT columns (src for the authority update, dst
+    for the hub update), so the persisted path caches TWO
     hash-partitioned copies of the edge list — e_src and e_dst — each
     co-partitioned with its join. A src-bucketed table
     (``pre_partitioned=True``) feeds e_src with ZERO setup exchanges
@@ -666,22 +660,21 @@ def hits(
     the bucket hash clusters a superset-keyed aggregation, so no
     exchange is inserted); e_dst always costs one |E| shuffle at setup,
     paid ONCE from the already-cached e_src and amortized over every
-    iteration. "checkpoint" (the local-mode default, same measured
-    trade as pagerank) stores one copy and lets each iteration
+    iteration. In-session edge frames get a local checkpoint (the
+    local-mode choice, same measured trade as pagerank): one copy and lets each iteration
     re-shuffle the edge side as spilled-disk exchanges."""
     if iters < 1:
         raise ValueError(f"hits: iters must be >= 1 (got {iters})")
     pre = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).distinct()
     par = max(edges.sparkSession.sparkContext.defaultParallelism, 1)
-    if edge_storage is None:
-        edge_storage = "persist" if pre_partitioned else "checkpoint"
     global _LAST_HITS_EDGE_EXCHANGES, _LAST_HITS_ITER_EXCHANGES
-    if edge_storage == "persist":
-        built = pre if pre_partitioned else _by_src(pre)
+    if pre_partitioned:
+        # raw persists, freed by the ``finally`` below: a local
+        # checkpoint would drop the partitioning this path keeps
         _LAST_HITS_EDGE_EXCHANGES = (
-            built._jdf.queryExecution().executedPlan().toString().count("Exchange")
+            pre._jdf.queryExecution().executedPlan().toString().count("Exchange")
         )
-        e_src = built.persist()
+        e_src = pre.persist()
         e_src.count()
         # dst-partitioned twin, built once FROM the cached copy (no
         # upstream re-derivation), so the hub-update join is edge-side
@@ -692,73 +685,72 @@ def hits(
         e_src = materialize(_by_src(pre))
         _LAST_HITS_EDGE_EXCHANGES = 1
         e_dst = e_src
-    nodes = materialize(_nodes(e_src))
-    if nodes.count() == 0:
-        if edge_storage == "persist":
+    try:
+        nodes, n_nodes = counted(_nodes(e_src))
+        if n_nodes == 0:
+            return nodes.withColumn("authority", F.lit(0.0)).withColumn("hub", F.lit(0.0))
+        hub = nodes.withColumn("s", F.lit(1.0))
+
+        auth = None
+        held: list[DataFrame] = []  # the last boundary's (auth, hub)
+        for i in range(iters):
+            auth = (
+                e_src.join(hub.withColumnRenamed("node", "src"), "src")
+                .groupBy("dst")
+                .agg(F.sum("s").alias("s"))
+                .withColumnRenamed("dst", "node")
+            )
+            # Checkpoint placement (r15): at a boundary, materialize auth
+            # BEFORE building hub from it. The previous shape checkpointed
+            # (auth, hub) as a pair AFTER both were built, so hub's plan
+            # still referenced the pre-checkpoint auth subtree and the hub
+            # checkpoint re-derived the whole auth chain of the segment a
+            # second time — the final post-loop pair paid a full extra
+            # segment. The final iteration is now a boundary too (it
+            # replaces the post-loop double checkpoint, same frames, same
+            # math). Measured at sf0.1 local[32], interleaved fresh-process
+            # rounds on the supplier query shape: 7.98/6.60 s → 5.82/5.62 s.
+            boundary = ((i + 1) % checkpoint_every == 0) or i == iters - 1
+            if boundary:
+                # the new auth severs the lineage to the last boundary's
+                # frames, so they are freed here
+                auth = materialize(auth)
+                for df in held:
+                    release(df)
+                held = [auth]
+            hub = (
+                e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
+                .groupBy("src")
+                .agg(F.sum("s").alias("s"))
+                .withColumnRenamed("src", "node")
+            )
+            if i == 0:
+                # runtime-exchange observable (pagerank's ENSURE_REQUIREMENTS
+                # convention, plan_id-deduped): the persisted path must show
+                # strictly fewer — both |E|-row edge sides arrive
+                # pre-partitioned from cache. The cached builds' own
+                # exchanges (the distinct + the dst repartition) are
+                # subtracted: they are one-time setup, reprinted into every
+                # referencing plan by the InMemoryRelation dump.
+                noise: set[str] = set()
+                if pre_partitioned:
+                    noise = _ensure_exchange_ids(e_src) | _ensure_exchange_ids(e_dst)
+                _LAST_HITS_ITER_EXCHANGES = len(_ensure_exchange_ids(hub) - noise)
+            if boundary:
+                # auth was already materialized above, so this checkpoint
+                # reads it instead of re-deriving the segment's auth chain.
+                # The final boundary also covers the normalizer below: the
+                # final frames are each read twice (normalizer agg + output
+                # join), and the checkpoint severs lineage from the cached
+                # edge tables so the persisted path can release them
+                # (CacheManager entries are not GC-reclaimed — pagerank's
+                # recurring-job discipline).
+                hub = materialize(hub)
+                held.append(hub)
+    finally:
+        if pre_partitioned:
             e_src.unpersist()
             e_dst.unpersist()
-        return nodes.withColumn("authority", F.lit(0.0)).withColumn("hub", F.lit(0.0))
-    hub = nodes.withColumn("s", F.lit(1.0))
-
-    auth = None
-    held: list[DataFrame] = []  # the last boundary's (auth, hub)
-    for i in range(iters):
-        auth = (
-            e_src.join(hub.withColumnRenamed("node", "src"), "src")
-            .groupBy("dst")
-            .agg(F.sum("s").alias("s"))
-            .withColumnRenamed("dst", "node")
-        )
-        # Checkpoint placement (r15): at a boundary, materialize auth
-        # BEFORE building hub from it. The previous shape checkpointed
-        # (auth, hub) as a pair AFTER both were built, so hub's plan
-        # still referenced the pre-checkpoint auth subtree and the hub
-        # checkpoint re-derived the whole auth chain of the segment a
-        # second time — the final post-loop pair paid a full extra
-        # segment. The final iteration is now a boundary too (it
-        # replaces the post-loop double checkpoint, same frames, same
-        # math). Measured at sf0.1 local[32], interleaved fresh-process
-        # rounds on the supplier query shape: 7.98/6.60 s → 5.82/5.62 s.
-        boundary = ((i + 1) % checkpoint_every == 0) or i == iters - 1
-        if boundary:
-            # the new auth severs the lineage to the last boundary's
-            # frames, so they are freed here
-            auth = materialize(auth)
-            for df in held:
-                release(df)
-            held = [auth]
-        hub = (
-            e_dst.join(auth.withColumnRenamed("node", "dst"), "dst")
-            .groupBy("src")
-            .agg(F.sum("s").alias("s"))
-            .withColumnRenamed("src", "node")
-        )
-        if i == 0:
-            # runtime-exchange observable (pagerank's ENSURE_REQUIREMENTS
-            # convention, plan_id-deduped): the persist path must show
-            # strictly fewer — both |E|-row edge sides arrive
-            # pre-partitioned from cache. The cached builds' own
-            # exchanges (the distinct + the dst repartition) are
-            # subtracted: they are one-time setup, reprinted into every
-            # referencing plan by the InMemoryRelation dump.
-            noise: set[str] = set()
-            if edge_storage == "persist":
-                noise = _ensure_exchange_ids(e_src) | _ensure_exchange_ids(e_dst)
-            _LAST_HITS_ITER_EXCHANGES = len(_ensure_exchange_ids(hub) - noise)
-        if boundary:
-            # auth was already materialized above, so this checkpoint
-            # reads it instead of re-deriving the segment's auth chain.
-            # The final boundary also covers the normalizer below: the
-            # final frames are each read twice (normalizer agg + output
-            # join), and the checkpoint severs lineage from the cached
-            # edge tables so the persist path can release them
-            # (CacheManager entries are not GC-reclaimed — pagerank's
-            # recurring-job discipline).
-            hub = materialize(hub)
-            held.append(hub)
-    if edge_storage == "persist":
-        e_src.unpersist()
-        e_dst.unpersist()
 
     def _normalized(scored: DataFrame, out: str) -> DataFrame:
         total = scored.agg(F.sum("s").alias("_t"))
@@ -913,7 +905,7 @@ def bfs_hops(
         return dist.unionByName(new)
 
     seeds0 = seeds.select(F.col("node")).distinct().withColumn("hops", F.lit(0))
-    dist, converged = fixpoint(seeds0, expand, max_rounds, until_stable=True)
+    dist, converged = fixpoint(seeds0, expand, max_rounds, until=F.count(F.lit(1)))
     return dist.withColumn("converged", F.lit(converged))
 
 

@@ -33,6 +33,8 @@ from operator import add
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
+
 
 def bucketize(col: Column, cmin: Column, cmax: Column, bits: int) -> Column:
     """Map ``col`` into [0, 2^bits) by linear min-max scaling.
@@ -143,9 +145,9 @@ def plan_file_compaction(
     # is never replayed per branch (the multi-reference re-derivation
     # trap). Cheap by construction: this operator runs over FILE
     # METADATA (one row per file/doc), not data rows.
-    cum = distributed_prefix_sum(
-        df, [group_col, order_col], [size_col], out_prefix="_cum_"
-    ).localCheckpoint(eager=True)
+    cum = materialize(
+        distributed_prefix_sum(df, [group_col, order_col], [size_col], out_prefix="_cum_")
+    )
     totals = cum.groupBy(group_col).agg(F.sum(size_col).alias("_gbytes"))
     totals, wg = spine_window(
         totals, [group_col], max_rows=65536, label="compaction-groups"

@@ -24,6 +24,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from ..materialize import materialize
+
 
 # -- A1/A2: null & NaN audit ------------------------------------------------
 
@@ -483,10 +485,9 @@ def assign_dense_ids(
     # caller's whole upstream subtree (and re-samples range boundaries,
     # which must be IDENTICAL between the two reads for the offsets to
     # line up with the in-partition ranks)
-    ranged = (
+    ranged = materialize(
         df.repartitionByRange(par, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     counts = ranged.groupBy("_pid").agg(F.count(F.lit(1)).alias("_n"))
     # prefix-sum offsets via a tiny broadcast theta self-join (one row
@@ -684,10 +685,9 @@ def distributed_prefix_sum(
     if not order_cols or not sum_cols:
         raise ValueError("distributed_prefix_sum: order_cols and sum_cols required")
     par = num_partitions or df.sparkSession.sparkContext.defaultParallelism
-    ranged = (
+    ranged = materialize(
         df.repartitionByRange(par, *order_cols)
         .withColumn("_pid", F.spark_partition_id())
-        .localCheckpoint(eager=True)
     )
     totals = ranged.groupBy("_pid").agg(
         *[F.sum(c).alias(f"_t_{c}") for c in sum_cols]

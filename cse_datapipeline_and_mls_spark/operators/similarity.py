@@ -18,6 +18,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from ..materialize import materialize
+
 
 _NUM_PARTITIONS_CACHE: dict = {}
 
@@ -185,6 +187,9 @@ def _cached_index(source_df: DataFrame, key_parts: tuple, build):
         while len(_INDEX_CACHE) >= 16:
             _, old = _INDEX_CACHE.popitem(last=False)
             old.unpersist()
+        # A raw persist, not ``materialize``: the entry is a declared
+        # session fixture that must outlive the query_scope of the query
+        # that built it; the LRU above is what frees it.
         _INDEX_CACHE[key] = build().persist()
     else:
         _INDEX_CACHE.move_to_end(key)
@@ -576,7 +581,7 @@ def compact_ivf_index(
     independent of every other row, so compaction can never change
     assignments."""
     live = ivf_apply_tombstones(inv, tombstones, id_col=id_col)
-    return live.repartition("_cell").localCheckpoint(eager=True)
+    return materialize(live.repartition("_cell"))
 
 
 def load_ivf_index(spark, path: str):
@@ -1132,9 +1137,7 @@ def pca_power_topvec(
     if iters < 2:
         raise ValueError(f"pca_power_topvec: iters must be >= 2, got {iters}")
     spark = emb.sparkSession
-    e = emb.select(
-        F.col(vec_col).cast("array<double>").alias("emb")
-    ).localCheckpoint(eager=True)
+    e = materialize(emb.select(F.col(vec_col).cast("array<double>").alias("emb")))
     v_df = spark.range(1).select(F.array(*[F.lit(1.0)] * dim).alias("v"))
     last = None
     for _ in range(iters):

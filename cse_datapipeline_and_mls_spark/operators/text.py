@@ -11,6 +11,8 @@ from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 from pyspark.sql.column import Column
 
+from ..materialize import materialize
+
 # Tiny public stopword list (subset of the classic english stopwords used by
 # Spark's StopWordsRemover / NLTK; public knowledge).
 STOPWORDS = (
@@ -743,10 +745,9 @@ def source_boilerplate_audit(
     # a segment repeating inside one document. Checkpointed: both the
     # per-segment rollup and the affected-docs join read it, and the
     # upstream segmenting scan must not re-derive per reference.
-    seg_docs = (
+    seg_docs = materialize(
         segs.groupBy("source", "h", "_id")
         .agg(F.count(F.lit(1)).alias("_n"))
-        .localCheckpoint(eager=True)
     )
     per_seg = seg_docs.groupBy("source", "h").agg(
         F.count(F.lit(1)).alias("n_docs")
@@ -814,7 +815,7 @@ def remove_source_boilerplate(
         words.alias("_w"),
         ((F.size(words) - 1) / seg_words).cast("int").alias("_mx"),
     )
-    segs = (
+    segs = materialize(
         d.select(
             "_id",
             "source",
@@ -833,7 +834,6 @@ def remove_source_boilerplate(
         )
         # both the boilerplate-set build and the hit join read this —
         # materialize once, same discipline as the audit's seg_docs
-        .localCheckpoint(eager=True)
     )
     bp = (
         segs.groupBy("source", "h")

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from ..operators.numeric import q6 as _q6
 from ..operators.relational import assign_dense_ids
 from ..operators.tswindow import kaplan_meier, spine_cumsum, spine_window
@@ -537,7 +538,7 @@ def agg_ks_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # materialize the (distinct-price-sized) grouped frame once: the
     # routing count and the cumulative pass both read it
-    u = u.localCheckpoint(eager=True)
+    u = materialize(u)
     e = spine_cumsum(u, ["p"], ["ca", "cb"], threshold=65536).select(
         (F.col("cum_ca") * 1.0 / F.lit(na)).alias("fa"),
         (F.col("cum_cb") * 1.0 / F.lit(nb)).alias("fb"),
@@ -954,10 +955,9 @@ def agg_seasonal_hour_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the profile frame (|types| x 24 rows) is referenced three times
     # (base derivation, breach join, output join) — materialize it once
     # or each reference re-derives the full events aggregation
-    prof = (
+    prof = materialize(
         ev.groupBy("event_type", "hr")
         .agg(F.count(F.lit(1)).alias("n"), F.avg("value").alias("hour_avg"))
-        .localCheckpoint(eager=True)
     )
     base = prof.groupBy("event_type").agg(
         (F.sum(F.col("hour_avg") * F.col("n")) / F.sum("n")).alias("type_avg")
@@ -1946,12 +1946,12 @@ def agg_lorenz_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ..operators.relational import assign_dense_ids
 
     orders = load_table(spark, sf_dir, "orders")
-    cr = orders.groupBy("o_custkey").agg(
-        F.sum(F.round(F.col("o_totalprice") * 100).cast("long"))
-        .cast("long")
-        .alias("rc")
     # materialize ONCE: cr feeds both the rank phases and the totals agg
-    ).localCheckpoint(eager=True)
+    cr = materialize(
+        orders.groupBy("o_custkey").agg(
+            F.sum(F.round(F.col("o_totalprice") * 100).cast("long")).cast("long").alias("rc")
+        )
+    )
     ranked = assign_dense_ids(cr, ["rc", "o_custkey"], id_col="id")
     t = cr.agg(
         F.count(F.lit(1)).cast("long").alias("n"),
@@ -2139,7 +2139,7 @@ def agg_cvm_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     a = o.filter(F.year("o_orderdate") == 1995).select(F.col("o_totalprice").alias("p"))
     b = o.filter(F.year("o_orderdate") == 1996).select(F.col("o_totalprice").alias("p"))
     na, nb = a.count(), b.count()
-    u = (
+    u = materialize(
         a.withColumn("side", F.lit("a"))
         .unionByName(b.withColumn("side", F.lit("b")))
         .groupBy("p")
@@ -2147,7 +2147,6 @@ def agg_cvm_price_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.count(F.when(F.col("side") == "a", 1)).alias("ca"),
             F.count(F.when(F.col("side") == "b", 1)).alias("cb"),
         )
-        .localCheckpoint(eager=True)
     )
     e = spine_cumsum(u, ["p"], ["ca", "cb"], threshold=65536)
     gap = F.col("cum_ca") * 1.0 / F.lit(na) - F.col("cum_cb") * 1.0 / F.lit(nb)
@@ -2288,10 +2287,9 @@ def agg_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     # users-sized first-touch frame is read by both the cohort-size agg
     # and the revenue join — checkpoint once (the multi-reference trap)
-    first_ev = (
+    first_ev = materialize(
         ev.groupBy("user_id")
         .agg(F.date_trunc("week", F.min("ts")).cast("date").alias("cohort"))
-        .localCheckpoint(eager=True)
     )
     sizes = first_ev.groupBy("cohort").agg(F.count(F.lit(1)).alias("n_users"))
     rev = (
@@ -2510,10 +2508,9 @@ def agg_kendall_tau_b(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4 downstream references (pair join sides, both marginals, total):
     # materialize the ≤550-row cell table once or every reference
     # re-runs the fact scan + aggregation
-    cells = (
+    cells = materialize(
         li.groupBy("x", "y")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     a = cells.select(
         F.col("x").alias("xa"), F.col("y").alias("ya"), F.col("c").alias("ca")
@@ -2632,11 +2629,13 @@ def t_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lead("event_type").over(w).alias("nxt"),
     ).filter(F.col("nxt").isNotNull())
     cnt = seq.groupBy("cur", "nxt").agg(F.count(F.lit(1)).cast("long").alias("n"))
-    tp = cnt.select(
-        "cur",
-        "nxt",
-        (F.col("n") * 1.0 / F.sum("n").over(Window.partitionBy("cur"))).alias("p"),
-    ).localCheckpoint(eager=True)
+    tp = materialize(
+        cnt.select(
+            "cur",
+            "nxt",
+            (F.col("n") * 1.0 / F.sum("n").over(Window.partitionBy("cur"))).alias("p"),
+        )
+    )
     st = tp.select(F.col("cur").alias("state")).distinct()
     ns = st.agg(F.count(F.lit(1)).cast("long").alias("k"))
     pi = st.crossJoin(F.broadcast(ns)).select(
@@ -3083,7 +3082,7 @@ def t_cox_proportional_hazards(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     g, w0 = spine_window(g, [F.desc("dur")], max_rows=65536, label="coxph_durs")
     w = w0.rowsBetween(Window.unboundedPreceding, 0)
-    risk = (
+    risk = materialize(
         g.select(
             "dur",
             "d_d",
@@ -3092,7 +3091,6 @@ def t_cox_proportional_hazards(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.sum("n1_d").over(w).cast("long").alias("n1_at"),
         )
         .filter(F.col("d_d") > 0)
-        .localCheckpoint(eager=True)
     )
     q9 = lambda c: F.floor(c * 1000000000 + F.lit(0.5)) / 1000000000  # noqa: E731
 

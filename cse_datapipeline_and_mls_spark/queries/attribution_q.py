@@ -30,7 +30,7 @@ DuckDB v1.0 inlines CTEs — un-annotated, the journey scan re-evaluates
 2^7 times (measured 132 s); AS MATERIALIZED pins each round to one
 evaluation. The Spark side needs the mirror-image discipline: the
 matrix feeds its own join twice per round, so each round is
-repartition(1) + eager localCheckpoint (without it the lineage doubles
+repartition(1) + materialized by ``fixpoint`` (without it the lineage doubles
 per round and default-width exchanges on a 245-row frame dominate —
 the naive loop measured 150+ s, this one a few seconds).
 """
@@ -40,6 +40,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import fixpoint
 from ..operators.numeric import q6 as _q6
 from ..sources import load_table
 from . import register
@@ -251,12 +252,9 @@ def t_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.lit(1.0).alias("p"),
         )
     )
-    # <=245 rows for ever after — one partition, materialized per round
-    # (the matrix feeds its own join twice per squaring; see module
-    # docstring for the measured cost of skipping this).
-    m = vts.unionByName(absorb).repartition(1).localCheckpoint(eager=True)
     q9 = lambda c: F.floor(c * 1000000000 + F.lit(0.5)) / 1000000000  # noqa: E731
-    for _ in range(_SQUARINGS):
+
+    def square(m: DataFrame, r: int) -> DataFrame:
         a = m.select(
             F.col("variant"),
             F.col("src"),
@@ -269,13 +267,17 @@ def t_attribution_markov_removal(spark: SparkSession, sf_dir: str) -> DataFrame:
             "dst",
             F.col("p").alias("pb"),
         )
-        m = (
+        return (
             a.join(F.broadcast(b), (a["variant"] == b["v2"]) & (a["mid"] == b["mid2"]))
             .groupBy("variant", "src", "dst")
             .agg(q9(F.sum(F.col("pa") * F.col("pb"))).alias("p"))
             .repartition(1)
-            .localCheckpoint(eager=True)
         )
+
+    # <=245 rows for ever after — one partition, materialized per round
+    # (the matrix feeds its own join twice per squaring; see module
+    # docstring for the measured cost of skipping this).
+    m, _ = fixpoint(vts.unionByName(absorb).repartition(1), square, _SQUARINGS)
     pc = m.filter((F.col("src") == "START") & (F.col("dst") == "CONV")).select(
         "variant", "p"
     )

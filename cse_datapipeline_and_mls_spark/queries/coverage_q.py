@@ -1166,40 +1166,42 @@ def x_pagerank_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _bucketed_table(spark: SparkSession, prefix: str, sf_dir: str) -> tuple[str, bool]:
+    """(name, exists) of the bucketed table ``prefix`` built for the data
+    root ``sf_dir``: ``<prefix>_<leaf>_<sha1(root)[:8]>``. Keyed by the
+    FULL data root, not just its leaf: two roots sharing a basename must
+    not silently reuse each other's tables (ADVICE r5); the leaf stays
+    in the name for readability, the digest disambiguates.
+
+    When the catalog lacks the table, any directory a previous session
+    left at its warehouse location is deleted (the default in-memory
+    catalog forgets managed tables on exit, and DROP TABLE cannot clear
+    an orphan it never heard of), through the Hadoop FileSystem API —
+    scheme-aware, unlike a raw shutil.rmtree of the URI string."""
+    import hashlib
+    import re
+
+    root = sf_dir.rstrip("/")
+    leaf = re.sub(r"\W", "_", root.rsplit("/", 1)[-1])
+    table = f"{prefix}_{leaf}_{hashlib.sha1(root.encode()).hexdigest()[:8]}"
+    if spark.catalog.tableExists(table):
+        return table, True
+    wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(f"{wh}/{table}")
+    jpath.getFileSystem(spark._jsc.hadoopConfiguration()).delete(jpath, True)
+    return table, False
+
+
 def _bucketed_purchase_edges(spark: SparkSession, sf_dir: str) -> str:
     """Idempotently build (once per data root) the src-bucketed
     customer→supplier purchase-edge table the iterative graph queries
     share — ONE pay-at-ingest layout serving PageRank AND HITS, the
     production shape where a recurring layout amortizes across every
-    consumer. Returns the table name.
-
-    Keyed by the FULL data root, not just its leaf: two roots sharing
-    a basename must not silently reuse each other's edges (ADVICE r5).
-    The leaf stays in the name for readability; the digest
-    disambiguates."""
-    import hashlib
-    import re
-
+    consumer. Returns the table name (see ``_bucketed_table``)."""
     from ..sources.sinks import write_bucketed
 
-    root = sf_dir.rstrip("/")
-    table = (
-        "pr_edges_b_"
-        + re.sub(r"\W", "_", root.rsplit("/", 1)[-1])
-        + "_"
-        + hashlib.sha1(root.encode()).hexdigest()[:8]
-    )
-    if not spark.catalog.tableExists(table):
-        # A previous session may have left the managed-table directory
-        # behind (the default in-memory catalog forgets it on exit).
-        # DROP TABLE can't clear an orphan the catalog never heard of,
-        # so delete the location through the Hadoop FileSystem API —
-        # scheme-aware, unlike a raw shutil.rmtree of the URI string.
-        wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{wh}/{table}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+    table, exists = _bucketed_table(spark, "pr_edges_b", sf_dir)
+    if not exists:
         o = load_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_suppkey")
         n_buckets = max(spark.sparkContext.defaultParallelism, 1)
@@ -1230,27 +1232,11 @@ def _bucketed_copurchase_edges(spark: SparkSession, sf_dir: str) -> str:
     means every consumer skips the canonicalize-distinct shuffle
     (triangle_counts(assume_canonical=True)); bucketing by the low
     endpoint co-locates each vertex's edge list for degree/orientation
-    work. Keyed by the FULL data root digest (ADVICE r5)."""
-    import hashlib
-    import re
-
+    work. Named by ``_bucketed_table``."""
     from ..sources.sinks import write_bucketed
 
-    root = sf_dir.rstrip("/")
-    table = (
-        "copur_edges_b_"
-        + re.sub(r"\W", "_", root.rsplit("/", 1)[-1])
-        + "_"
-        + hashlib.sha1(root.encode()).hexdigest()[:8]
-    )
-    if not spark.catalog.tableExists(table):
-        # clear any orphan directory a previous session left behind
-        # (in-memory catalog forgets managed tables on exit)
-        wh = spark.conf.get("spark.sql.warehouse.dir").rstrip("/")
-        jvm = spark._jvm
-        jpath = jvm.org.apache.hadoop.fs.Path(f"{wh}/{table}")
-        fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-        fs.delete(jpath, True)
+    table, exists = _bucketed_table(spark, "copur_edges_b", sf_dir)
+    if not exists:
         li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_partkey")
         a = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("a"))
         b = li.select(F.col("l_orderkey").alias("k"), F.col("l_partkey").alias("b"))
@@ -1287,20 +1273,11 @@ def _drop_copurchase_artifacts(spark: SparkSession, sf_dir: str) -> None:
     production posture but left the ~once-per-session edge+wedge setup
     cost invisible in the bench artifact (VERDICT r12 'What's wrong'
     #2) — the setup-leg row calls this before each timed build."""
-    import hashlib
-    import re
-
     stats = _TRI_STATS_MEMO.pop((spark.sparkContext.applicationId, sf_dir.rstrip("/")), None)
     if stats is not None:
         release(stats)
-    root = sf_dir.rstrip("/")
-    table = (
-        "copur_edges_b_"
-        + re.sub(r"\W", "_", root.rsplit("/", 1)[-1])
-        + "_"
-        + hashlib.sha1(root.encode()).hexdigest()[:8]
-    )
-    if spark.catalog.tableExists(table):
+    table, exists = _bucketed_table(spark, "copur_edges_b", sf_dir)
+    if exists:
         spark.sql(f"DROP TABLE `{table}`")
 
 
@@ -2061,11 +2038,10 @@ def x_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     # and BOTH pair-join sides; unmaterialized, the scan+distinct of the
     # biggest table re-executes 4x (same re-derivation trap as the
     # triangle edge build, graph.py)
-    b = (
+    b = materialize(
         load_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_partkey")
         .distinct()
-        .localCheckpoint(eager=True)
     )
     meta = b.agg(F.countDistinct("l_orderkey").cast("long").alias("n_orders"))
     item = b.groupBy("l_partkey").agg(F.count(F.lit(1)).cast("long").alias("n_item"))
@@ -2881,8 +2857,8 @@ def x_hits_bucketed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     pay-at-ingest): the bucketed scan feeds
     hits(pre_partitioned=True), so the src edge copy materializes with
     ZERO exchanges (the bucket hash clusters the (src,dst) distinct
-    too) and "persist" keeps both per-iteration edge sides exchange-
-    free (the dst twin is built once from the cached src copy;
+    too) and the persisted copies keep both per-iteration edge sides
+    exchange-free (the dst twin is built once from the cached src copy;
     runtime exchanges 5 → 3 per iteration, asserted via the
     plan_id-deduped observables in tests/test_graph.py). Identical
     scores to x_hits_suppliers — same unrolled-SQL oracle. The same

@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..materialize import materialize
+from ..materialize import counted, materialize, release
 from ..operators import dedup as D
 from ..operators.numeric import q6 as _q6
 from ..sources import load_table
@@ -376,13 +376,12 @@ def x_temperature_sampling_weights(spark: SparkSession, sf_dir: str) -> DataFram
     # |sources|-row rollup is referenced by three downstream frames
     # (total, weights, normalizer) — checkpoint it once so the corpus
     # scan doesn't re-derive per reference (the multi-reference trap)
-    s = (
+    s = materialize(
         docs.groupBy("source")
         .agg(
             F.count(F.lit(1)).alias("n_docs"),
             F.sum("n_chars").cast("long").alias("n_chars"),
         )
-        .localCheckpoint(eager=True)
     )
     tot = s.agg(F.sum("n_chars").alias("t"))
     p = s.crossJoin(F.broadcast(tot)).select(
@@ -611,11 +610,10 @@ def x_coverage_greedy_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidates per round) or lazy evaluation — same operator shape,
     documented here rather than silently approximated."""
     docs = load_table(spark, sf_dir, "documents")
-    dg = (
+    dg = materialize(
         D.shingle(docs, "text", n=3)
         .select("doc_id", F.explode("shingles").alias("g"))
         .distinct()
-        .localCheckpoint(eager=True)
     )
     covered: DataFrame | None = None
     selected: list[int] = []
@@ -631,12 +629,14 @@ def x_coverage_greedy_selection(spark: SparkSession, sf_dir: str) -> DataFrame:
         doc_id, gain = top[0]["doc_id"], top[0]["gain"]
         selected.append(doc_id)
         new_cov = dg.filter(F.col("doc_id") == doc_id).select("g")
-        covered = (
-            new_cov
-            if covered is None
-            else covered.unionByName(new_cov).distinct()
-        ).localCheckpoint(eager=True)
-        rows.append((r, doc_id, gain, covered.count()))
+        # one round of covered set held: the one it replaces is freed
+        nxt, n_covered = counted(
+            new_cov if covered is None else covered.unionByName(new_cov).distinct()
+        )
+        if covered is not None:
+            release(covered)
+        covered = nxt
+        rows.append((r, doc_id, gain, n_covered))
     return spark.createDataFrame(
         rows, "rnd long, doc_id long, gain long, covered_total long"
     )

@@ -12,6 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as X
@@ -1104,11 +1105,10 @@ def x_heavy_hitters(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact token counts materialized once — they feed both the heavy
     # cut and (via their sum) the total-n threshold, so the explode over
     # the corpus runs exactly one time
-    counts = (
+    counts = materialize(
         docs.select(F.explode(words).alias("item"))
         .groupBy("item")
         .agg(F.count(F.lit(1)).cast("long").alias("true_count"))
-        .localCheckpoint(eager=True)
     )
     total = counts.agg(F.sum("true_count").cast("long").alias("n"))
     heavy = counts.crossJoin(F.broadcast(total)).filter(
@@ -1702,10 +1702,9 @@ def x_ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.array_distinct(X.word_ngrams(F.col("w"), 5)).alias("grams"),
     )
-    e = (
+    e = materialize(
         grams.select("doc_id", F.explode("grams").alias("gram"))
         .select("doc_id", F.xxhash64("gram").alias("g"))
-        .localCheckpoint(eager=True)
     )
     per_doc = e.groupBy("doc_id").agg(
         F.count(F.lit(1)).cast("long").alias("n_grams")
@@ -1837,13 +1836,12 @@ def x_source_contamination_matrix(spark: SparkSession, sf_dir: str) -> DataFrame
     from ..operators import dedup as D
 
     docs = load_table(spark, sf_dir, "documents").select("source", "doc_id", "text")
-    gram_sources = (
+    gram_sources = materialize(
         D.shingle(docs, "text", n=3)
         .select("source", F.explode("shingles").alias("g"))
         .groupBy("g")
         .agg(F.array_sort(F.collect_set("source")).alias("srcs"))
         .select("srcs")
-        .localCheckpoint(eager=True)
     )
     sizes = (
         gram_sources.select(F.explode("srcs").alias("source"))
@@ -2075,10 +2073,9 @@ def x_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
             "word"
         ),
     ).filter(F.col("word") != "")
-    cw = (
+    cw = materialize(
         w.groupBy("source", "word")
         .agg(F.count(F.lit(1)).cast("long").alias("c"))
-        .localCheckpoint(eager=True)
     )
     vocab = (
         cw.groupBy("word")
@@ -2098,7 +2095,7 @@ def x_js_divergence_sources(spark: SparkSession, sf_dir: str) -> DataFrame:
     p = grid.join(F.broadcast(tot), "source").select(
         "source", "word", ((F.col("c") + 0.5) / (F.col("n") + 100.0)).alias("p")
     )
-    p = p.localCheckpoint(eager=True)
+    p = materialize(p)
     a = p.select(
         F.col("source").alias("source_a"), "word", F.col("p").alias("pa")
     )
@@ -2361,7 +2358,7 @@ def x_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     cb = bg.groupBy("w1", "w2").agg(F.count(F.lit(1)).alias("n_b"))
     cu = toks.groupBy("word").agg(F.count(F.lit(1)).alias("n_u"))
     v = toks.agg(F.countDistinct("word").alias("vsz"))
-    score = (
+    score = materialize(
         bg.join(cb, ["w1", "w2"])
         .join(cu, F.col("w1") == F.col("word"))
         .crossJoin(F.broadcast(v))
@@ -2379,7 +2376,6 @@ def x_perplexity_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
         # materialize ONCE: the score frame feeds BOTH the tercile agg
         # and the bucket pass — unmaterialized, the whole bigram-LM
         # pipeline re-executes twice (the engine-wide re-derivation trap)
-        .localCheckpoint(eager=True)
     )
     cuts = score.agg(
         F.expr("percentile(lp, array(1.0D/3, 2.0D/3))").alias("q")

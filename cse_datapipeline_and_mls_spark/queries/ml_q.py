@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize, query_scope, release
 from ..operators import multimodal as MM
 from ..sources import load_table
 from . import register
@@ -104,18 +105,17 @@ def ml_gbt_classifier_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     feats = build_price_features(ev, "user_id", ["ts", "event_id"], "value")
     w = TS.series_window("user_id", ["ts", "event_id"])
-    # cache the window-feature lineage ONCE (VERDICT r12 #1): fit, the
-    # AUC pass, the confusion groupBy and n_test all read the cache
-    labeled = add_binary_label_and_weights(feats, "value", w).na.drop(
-        subset=DEFAULT_FEATURES
-    ).cache()
-    try:
+    # materialize the window-feature lineage ONCE (VERDICT r12 #1): fit,
+    # the AUC pass, the confusion groupBy and n_test all read it; the
+    # scope frees it once they are done
+    with query_scope():
+        labeled = materialize(
+            add_binary_label_and_weights(feats, "value", w).na.drop(subset=DEFAULT_FEATURES)
+        )
         train, test = time_split(labeled, "ts", test_days=7)
         model = classifier_pipeline(DEFAULT_FEATURES, max_iter=5, max_depth=3).fit(train)
         m = binary_metrics(model.transform(test))
         n_test = test.count()
-    finally:
-        labeled.unpersist()
     agg = ev.agg(
         F.count(F.lit(1)).alias("n"), F.date_sub(F.max("ts"), 7).alias("s")
     ).collect()[0]
@@ -179,7 +179,7 @@ def ml_feature_importances(spark: SparkSession, sf_dir: str) -> DataFrame:
     # sees bit-identical input. Measured interleaved at sf0.1 (5 fresh-
     # process rounds): 27.3 → 24.9 s aggregate warm-min (best round
     # 6.80 → 4.33 s).
-    train = train.localCheckpoint(eager=True)
+    train = materialize(train)
     model = classifier_pipeline(DEFAULT_FEATURES, max_iter=5, max_depth=3).fit(train)
     ranked = feature_importances(model, DEFAULT_FEATURES)
     vals = [float(v) for _, v in ranked]
@@ -239,16 +239,16 @@ def ml_gbt_regressor_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
     ev = load_table(spark, sf_dir, "events")
     feats = build_price_features(ev, "user_id", ["ts", "event_id"], "value")
     w = TS.series_window("user_id", ["ts", "event_id"])
-    # cache the window-feature lineage ONCE: fit + every metric action
-    # reads the cached block instead of re-running the window shuffle
-    # per action — the reference's §4 recompute quirk (VERDICT r12 #1)
-    labeled = (
-        TS.with_lead(feats, "pct_change", "target", w)
-        .filter(F.col("target").isNotNull())
-        .na.drop(subset=DEFAULT_FEATURES)
-        .cache()
-    )
-    try:
+    # materialize the window-feature lineage ONCE: fit + every metric
+    # action reads the stored block instead of re-running the window
+    # shuffle per action — the reference's §4 recompute quirk (VERDICT
+    # r12 #1); the scope frees it once they are done
+    with query_scope():
+        labeled = materialize(
+            TS.with_lead(feats, "pct_change", "target", w)
+            .filter(F.col("target").isNotNull())
+            .na.drop(subset=DEFAULT_FEATURES)
+        )
         train, test = time_split(labeled, "ts", test_days=7)
         model = regression_pipeline(DEFAULT_FEATURES, max_iter=5, max_depth=3).fit(train)
         # one fused aggregation: rmse/mse/mae/r2 + directional accuracy
@@ -256,8 +256,6 @@ def ml_gbt_regressor_metrics(spark: SparkSession, sf_dir: str) -> DataFrame:
         m = regression_report(model.transform(test))
         n_scored = score_with_price_reconstruction(model, test, price="value").count()
         n_test = test.count()
-    finally:
-        labeled.unpersist()
     agg = ev.agg(
         F.count(F.lit(1)).alias("n"), F.date_sub(F.max("ts"), 7).alias("s")
     ).collect()[0]
@@ -608,11 +606,11 @@ def ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     labels = QUERIES["x_quality_filter"](spark, sf_dir).select(
         "doc_id", F.col("keep").cast("double").alias("label")
     )
-    # cache the joined feature+label block ONCE (VERDICT r12 #1): its
-    # lineage re-runs the whole x_quality_filter query, and fit,
+    # materialize the joined feature+label block ONCE (VERDICT r12 #1):
+    # its lineage re-runs the whole x_quality_filter query, and fit,
     # transform, AUC and both split counts are each a full action
-    data = feats.join(labels, "doc_id").cache()
-    try:
+    with query_scope():
+        data = materialize(feats.join(labels, "doc_id"))
         bucket = (
             F.conv(F.substring(F.md5(F.col("doc_id").cast("string")), 1, 8), 16, 10)
             .cast("bigint") % 10
@@ -631,8 +629,6 @@ def ml_quality_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         # in Spark); the fit's quality rides as a boolean (measured AUC 1.0
         # at every SF vs the 0.9 bound asserted in tests/test_ml.py)
         n_train, n_test = train.count(), test.count()
-    finally:
-        data.unpersist()
     return spark.createDataFrame(
         [(n_train, n_test, bool(auc >= 0.9))],
         "n_train long, n_test long, auc_ge_090 boolean",
@@ -831,7 +827,7 @@ def ml_prefixspan_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.ml.fpm import PrefixSpan
 
     ev = load_table(spark, sf_dir, "events").select("user_id", "ts", "event_id", "event_type")
-    seqs = (
+    seqs = materialize(
         ev.groupBy("user_id")
         .agg(
             F.array_sort(
@@ -844,7 +840,6 @@ def ml_prefixspan_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
         # PrefixSpan scans its input once per pattern-growth round —
         # materialize the |users|-row sequence frame so each scan reads
         # the built sequences, not the events aggregation again
-        .localCheckpoint(eager=True)
     )
     ps = PrefixSpan(minSupport=0.2, maxPatternLength=2, sequenceCol="sequence")
     pat = ps.findFrequentSequentialPatterns(seqs)
@@ -1394,7 +1389,7 @@ def ml_item_cooccurrence_recs(spark: SparkSession, sf_dir: str) -> DataFrame:
     # before-plan shows the orders⋈lineitem + distinct subtree planned
     # TWICE with zero exchange reuse — two fact-table passes for one
     # set. |pur| is the distinct (cust, part) frame (2 int columns).
-    pur = purchases(li, o).localCheckpoint(eager=True)
+    pur = materialize(purchases(li, o))
     return _top3_recs(pur, top_neighbors(_cooccurrence_counts(li)))
 
 
@@ -1501,7 +1496,7 @@ def ml_als_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         .groupBy(F.col("o_custkey").alias("user"), F.col("l_partkey").alias("item"))
         .agg(F.count(F.lit(1)).cast("float").alias("rating"))
     )
-    r = r.localCheckpoint(eager=True)  # ALS iterates over it; sever the join lineage
+    r = materialize(r)  # ALS iterates over it; sever the join lineage
     als = ALS(
         rank=8,
         maxIter=5,
@@ -1524,6 +1519,9 @@ def ml_als_factorization(spark: SparkSession, sf_dir: str) -> DataFrame:
         and model.itemFactors.count() == n_items
         and len(model.userFactors.first()["features"]) == 8
     )
+    # the fit persists both factor RDDs; nothing reads them after this
+    release(model.userFactors)
+    release(model.itemFactors)
     return spark.createDataFrame(
         [(n_ratings, n_users, n_items, bool(rmse <= 0.5), bool(dims_ok))],
         "n_ratings long, n_users long, n_items long, rmse_le_05 boolean, factor_dims_match boolean",

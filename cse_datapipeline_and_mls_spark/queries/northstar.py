@@ -16,6 +16,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from ..operators import dedup as D
 from ..operators import similarity as S
 from ..operators import text as X
@@ -177,7 +178,7 @@ def x_minhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = D.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
     # materialized once: feeds the output rows, the denominator count and
     # the semi-join probe (3 consumers — re-derivation trap otherwise)
-    exact = exact.localCheckpoint(eager=True)
+    exact = materialize(exact)
     approx = D.minhash_neardup_pairs(
         docs, "text", "doc_id", jaccard_threshold=0.5
     ).select("id_a", "id_b")
@@ -243,10 +244,9 @@ def x_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes the exact side restricted to pairs with a batch
     member and expects TRUE."""
     docs = load_table(spark, sf_dir, "documents")
-    exact = (
+    exact = materialize(
         D.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.5)
         .filter((F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0))
-        .localCheckpoint(eager=True)
     )
     approx = D.minhash_neardup_incremental(
         docs.filter(F.col("doc_id") % 5 == 0),
@@ -318,7 +318,7 @@ def x_simhash_neardup_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     the boolean and fails the hash."""
     docs = load_table(spark, sf_dir, "documents")
     exact = D.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.9)
-    exact = exact.localCheckpoint(eager=True)
+    exact = materialize(exact)
     approx = D.simhash_neardup_pairs(docs, "text", "doc_id", max_hamming=3).select(
         "id_a", "id_b"
     )
@@ -548,7 +548,7 @@ def _ann_recall_verdict(
     path recover ≥ bound of the exact (query_id, vec_id) result set?
     The exact frame is materialized once (it feeds the output rows, the
     denominator count and the semi-join probe)."""
-    exact = exact.localCheckpoint(eager=True)
+    exact = materialize(exact)
     hits = exact.join(
         approx.select("query_id", "vec_id"), ["query_id", "vec_id"], "left_semi"
     )
@@ -1389,7 +1389,7 @@ def x_ann_ivf_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     inv_corpus = S.assign_cells_np(corpus, codebook)
     inv_delta = S.assign_cells_np(delta, codebook)
-    inv_incr = inv_corpus.unionByName(inv_delta).localCheckpoint(eager=True)
+    inv_incr = materialize(inv_corpus.unionByName(inv_delta))
     inv_full = S.assign_cells_np(emb, codebook)
 
     a = inv_incr.select("vec_id", "_cell")
@@ -1457,10 +1457,9 @@ def x_ann_ivf_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     adds = emb.filter(is_add)
     codebook = S.fit_codebook(base, k=32, seed=42, max_iter=5)
 
-    inv = (
+    inv = materialize(
         S.assign_cells_np(base, codebook)
         .unionByName(S.assign_cells_np(adds, codebook))
-        .localCheckpoint(eager=True)
     )
     tombstones = emb.filter(F.col("vec_id") % 10 == 3).select("vec_id")
     live_view = S.ivf_apply_tombstones(inv, tombstones)
@@ -1483,9 +1482,7 @@ def x_ann_ivf_delete_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact = S.brute_force_topk(
         live_emb, queries, k=5, id_col="vec_id", vec_col="embedding"
     )
-    approx = S.ivf_topk_from_index(
-        live_view, codebook, queries, k=5, nprobe=8
-    ).localCheckpoint(eager=True)
+    approx = materialize(S.ivf_topk_from_index(live_view, codebook, queries, k=5, nprobe=8))
     no_dead = (
         approx.join(tombstones, ["vec_id"], "left_semi")
         .agg(F.count(F.lit(1)).alias("n_dead"))
@@ -1552,10 +1549,9 @@ def x_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     batch = docs.filter(F.col("doc_id") % 5 == 0)
     corpus = docs.filter(F.col("doc_id") % 5 != 0)
-    exact = (
+    exact = materialize(
         D.ngram_jaccard_pairs(docs, "text", "doc_id", n=3, threshold=0.9)
         .filter((F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0))
-        .localCheckpoint(eager=True)
     )
     # ONE signature pass (r14 optimization): a SimHash depends only on
     # its own text, and this query consumes signatures THREE times
@@ -1564,18 +1560,22 @@ def x_simhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ~3 corpus-sized folds per run. Compute once, checkpoint, slice.
     # Bit-identical by construction, so the verdict semantics (and the
     # oracle hash) are unchanged.
-    sigs = D.with_simhash(
-        D._ensure_min_parallelism(docs.select("doc_id", "text")), "text"
-    ).select("doc_id", "simhash").localCheckpoint(eager=True)
-    incr = D.simhash_neardup_incremental(
-        batch,
-        corpus,
-        "text",
-        "doc_id",
-        max_hamming=3,
-        batch_sig=sigs.filter(F.col("doc_id") % 5 == 0),
-        corpus_sig=sigs.filter(F.col("doc_id") % 5 != 0),
-    ).localCheckpoint(eager=True)
+    sigs = materialize(
+        D.with_simhash(D._ensure_min_parallelism(docs.select("doc_id", "text")), "text").select(
+            "doc_id", "simhash"
+        )
+    )
+    incr = materialize(
+        D.simhash_neardup_incremental(
+            batch,
+            corpus,
+            "text",
+            "doc_id",
+            max_hamming=3,
+            batch_sig=sigs.filter(F.col("doc_id") % 5 == 0),
+            corpus_sig=sigs.filter(F.col("doc_id") % 5 != 0),
+        )
+    )
     full_touching = (
         D.simhash_neardup_pairs(docs, "text", "doc_id", max_hamming=3, sig=sigs)
         .filter((F.col("id_a") % 5 == 0) | (F.col("id_b") % 5 == 0))

@@ -18,6 +18,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from ..materialize import materialize
 from ..operators import tswindow as TS
 from ..sources import load_table
 from . import register, register_sql
@@ -2541,16 +2542,18 @@ def w_holt_forecast_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the residual agg AND the last-forecast pick both read this
     # bar-frame-sized projection — checkpoint once so the whole Holt
     # closed-form chain doesn't re-derive per reference
-    j = fc.select(
-        "user_id",
-        "day",
-        "close",
-        "forecast_1",
-        F.lag("forecast_1").over(w).alias("f_prev"),
-        F.row_number()
-        .over(Window.partitionBy("user_id").orderBy(F.desc("day")))
-        .alias("_rn_desc"),
-    ).localCheckpoint(eager=True)
+    j = materialize(
+        fc.select(
+            "user_id",
+            "day",
+            "close",
+            "forecast_1",
+            F.lag("forecast_1").over(w).alias("f_prev"),
+            F.row_number()
+            .over(Window.partitionBy("user_id").orderBy(F.desc("day")))
+            .alias("_rn_desc"),
+        )
+    )
     resid = (
         j.filter(F.col("f_prev").isNotNull())
         .groupBy("user_id")

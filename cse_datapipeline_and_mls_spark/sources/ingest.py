@@ -19,6 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import materialize
 from ..schemas import sanitize_columns
 
 
@@ -179,8 +180,8 @@ def read_jsonl_with_quarantine(
     filters on the same scan — Catalyst reuses it), and the quarantine
     keeps the ORIGINAL bytes, not a best-effort parse. Spark requires
     the corrupt column to be part of the declared schema and the
-    filter to run on a materialization boundary — we cache the parsed
-    frame, the documented contract for corrupt-record queries."""
+    filter to run on a materialization boundary — we materialize the
+    parsed frame, the documented contract for corrupt-record queries."""
     corrupt = "_corrupt_record"
     full = T.StructType(list(schema.fields) + [T.StructField(corrupt, T.StringType())])
     parsed = (
@@ -191,8 +192,8 @@ def read_jsonl_with_quarantine(
     )
     # Spark's documented caveat: referencing only the corrupt column of
     # a JSON scan raises/loses rows unless the frame is materialized
-    # first — cache() is the supported pattern.
-    parsed = parsed.cache()
+    # first.
+    parsed = materialize(parsed)
     good = parsed.filter(F.col(corrupt).isNull()).drop(corrupt)
     quarantined = parsed.filter(F.col(corrupt).isNotNull()).select(
         F.col(corrupt).alias("raw_line")

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import counted, query_scope
+
 
 def write_partitioned(
     df: DataFrame,
@@ -194,16 +196,17 @@ def merge_upsert_parquet(
         touched = [r[0] for r in updates.select(partition_col).distinct().collect()]
         pruned = target.filter(F.col(partition_col).isin(touched))
         merged = merge_upsert(pruned, updates, keys, **merge_kwargs)
-        # materialize before the overwrite: Spark refuses (or corrupts)
-        # a write whose plan still reads the destination path
-        merged = merged.localCheckpoint(eager=True)
-        n = merged.count()
-        # dynamic overwrite as a per-write option: a session-conf flip
-        # is not thread-safe (a sibling thread restoring "static"
-        # mid-write would wipe untouched partitions)
-        merged.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy(partition_col).parquet(path)
+        # materialize (and count, on the same job) before the overwrite:
+        # Spark refuses (or corrupts) a write whose plan still reads the
+        # destination path. The scope frees the blocks after the write.
+        with query_scope():
+            merged, n = counted(merged)
+            # dynamic overwrite as a per-write option: a session-conf
+            # flip is not thread-safe (a sibling thread restoring
+            # "static" mid-write would wipe untouched partitions)
+            merged.write.mode("overwrite").option(
+                "partitionOverwriteMode", "dynamic"
+            ).partitionBy(partition_col).parquet(path)
         return n
     merged = merge_upsert(target, updates, keys, **merge_kwargs)
     stage = path.rstrip("/") + "._stage"

@@ -31,6 +31,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from ..materialize import counted, materialize, query_scope
+
 EVENTS_STREAM_SCHEMA = T.StructType(
     [
         T.StructField("event_id", T.LongType()),
@@ -761,6 +763,7 @@ def _recover_partition_rewrite(path: str) -> None:
     _shutil.rmtree(bak)
 
 
+@query_scope()
 def _rewrite_touched_partitions(
     kept: DataFrame, path: str, bucket_col: str, touched: list[int]
 ) -> int:
@@ -780,8 +783,7 @@ def _rewrite_touched_partitions(
     if not touched:
         return 0
     # materialize before overwriting a path the plan reads from
-    kept = kept.localCheckpoint(eager=True)
-    n = kept.count()
+    kept, n = counted(kept)
     _backup_touched_partitions(path, bucket_col, touched)
     # dynamic overwrite as a PER-WRITE option, not a session-conf flip
     # (r15): the conf set/restore pattern is not thread-safe, and the
@@ -874,6 +876,7 @@ def erasure_cascade_stream(
     return writer.start()
 
 
+@query_scope()
 def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> None:
     """One DSAR batch of ``erasure_cascade_stream``, callable in batch
     mode: the foreachBatch body extracted to module level (VERDICT r13
@@ -892,11 +895,8 @@ def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> 
 
     spark = batch_df.sparkSession
     marker = store_path.rstrip("/") + "/_last_batch"
-    victims = (
-        batch_df.select("c_custkey")
-        .filter(F.col("c_custkey").isNotNull())
-        .distinct()
-        .localCheckpoint(eager=True)
+    victims, n_victims = counted(
+        batch_df.select("c_custkey").filter(F.col("c_custkey").isNotNull()).distinct()
     )
     # Content fingerprint of the victim batch (bounded: a DSAR batch
     # is driver-collectable by definition here). The skip requires
@@ -907,7 +907,6 @@ def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> 
     # Re-processing an already-applied victim set is safe — the
     # cascade is idempotent — so when in doubt we reprocess, never
     # skip.
-    n_victims = victims.count()
     if n_victims == 0:
         # an empty (or all-NULL) DSAR batch erases nothing; skip
         # before touching the store at all
@@ -963,9 +962,9 @@ def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> 
         ]
         orders = spark.read.parquet(paths["orders"]).filter(F.col(ob).isin(v_bkts))
         ev = spark.read.parquet(paths["events"]).filter(F.col(eb).isin(v_bkts))
-        vo = orders.join(
-            victims, orders["o_custkey"] == victims["c_custkey"], "left_semi"
-        ).localCheckpoint(eager=True)
+        vo = materialize(
+            orders.join(victims, orders["o_custkey"] == victims["c_custkey"], "left_semi")
+        )
         l_bkts = [
             r["b"]
             for r in vo.select(
@@ -983,9 +982,9 @@ def apply_erasure_batch(batch_df: DataFrame, batch_id: int, store_path: str) -> 
         orders = spark.read.parquet(paths["orders"])
         li = spark.read.parquet(paths["lineitem"])
         ev = spark.read.parquet(paths["events"])
-        vo = orders.join(
-            victims, orders["o_custkey"] == victims["c_custkey"], "left_semi"
-        ).localCheckpoint(eager=True)
+        vo = materialize(
+            orders.join(victims, orders["o_custkey"] == victims["c_custkey"], "left_semi")
+        )
 
     from concurrent.futures import ThreadPoolExecutor
 

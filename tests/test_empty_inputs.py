@@ -360,8 +360,9 @@ def test_r8_graph_ops_on_empty_edges(spark):
     assert dd.count() == 0 and dd.columns == ["degree", "n_nodes"]
     h = hits(empty_edges, iters=2)
     assert h.count() == 0 and h.columns == ["node", "authority", "hub"]
-    # persist mode must release its caches on the empty path too
-    assert hits(empty_edges, iters=2, edge_storage="persist").count() == 0
+    # the persisted (pre_partitioned) path must release its caches on
+    # the empty path too
+    assert hits(empty_edges, iters=2, pre_partitioned=True).count() == 0
 
 
 def test_r8_multimodal_ops_on_empty_corpus(spark, empty_docs):

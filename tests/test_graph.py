@@ -147,12 +147,14 @@ def test_pagerank_from_bucketed_edges_skips_the_edge_shuffle(spark):
     # re-shuffles per iteration
     ckpt_iter_exchanges = G._LAST_ITER_EXCHANGES
 
-    # persist storage keeps the hash partitioning → the per-iteration
-    # edge-side exchange is gone (only state + contribution agg remain),
-    # identical ranks
+    # persisted storage of src-partitioned input keeps the hash
+    # partitioning → the per-iteration edge-side exchange is gone (only
+    # state + contribution agg remain), identical ranks
     persisted = {
         r["node"]: r["rank"]
-        for r in G.pagerank(edges, iters=4, edge_storage="persist").collect()
+        for r in G.pagerank(
+            edges.repartition(8, "src"), iters=4, pre_partitioned=True
+        ).collect()
     }
     # at most two runtime exchanges remain — the contribution
     # aggregation, plus (on graphs too big to broadcast the state) the
@@ -296,7 +298,7 @@ def test_pagerank_empty_graph_releases_persist(spark, persistent_ids):
 
     before = persistent_ids()
     empty = spark.createDataFrame([], "src long, dst long")
-    out = pagerank(empty, iters=2, edge_storage="persist")
+    out = pagerank(empty, iters=2, pre_partitioned=True)
     assert out.count() == 0
     leaked = persistent_ids() - before
     assert not leaked, f"empty-graph pagerank left persistent RDDs: {leaked}"
@@ -563,7 +565,9 @@ def test_hits_from_bucketed_edges_skips_the_edge_shuffle(spark):
 
         persisted = {
             r["node"]: r
-            for r in G.hits(edges, iters=4, edge_storage="persist").collect()
+            for r in G.hits(
+                edges.repartition(8, "src"), iters=4, pre_partitioned=True
+            ).collect()
         }
         persist_iter_exchanges = G._LAST_HITS_ITER_EXCHANGES
         assert persist_iter_exchanges < ckpt_iter_exchanges
@@ -667,46 +671,6 @@ def test_k_core_holds_one_round_of_state(spark, persistent_ids):
             held[rounds] = len(persistent_ids() - before)
         assert not persistent_ids() - before
     assert held[3] == held[8] > 0, held
-
-
-def _graph_rows() -> list[str]:
-    """Registry rows that call an operators/graph.py operator, directly
-    or through the shared triangle-stats frame."""
-    import inspect
-
-    from cse_datapipeline_and_mls_spark.queries import QUERIES
-
-    return [
-        name
-        for name, fn in QUERIES.items()
-        if "operators.graph import" in inspect.getsource(fn)
-        or "_copurchase_tri_stats(" in inspect.getsource(fn)
-    ]
-
-
-def test_graph_rows_leave_no_persistent_rdds(spark, sf_dir, persistent_ids):
-    """Every graph row, built and noop-written inside query_scope(),
-    leaves no persistent RDD behind once the scope exits. The triangle
-    rows may keep only their declared session fixture, the memoized
-    stats frame."""
-    from cse_datapipeline_and_mls_spark.materialize import query_scope
-    from cse_datapipeline_and_mls_spark.queries import QUERIES
-    from cse_datapipeline_and_mls_spark.queries.coverage_q import _TRI_STATS_MEMO
-
-    names = _graph_rows()
-    assert len(names) == 17, names  # stale scan guard
-    leaks = {}
-    for name in names:
-        before = persistent_ids()
-        with query_scope():
-            QUERIES[name](spark, sf_dir).write.format("noop").mode("overwrite").save()
-        memo = {
-            df._jdf.queryExecution().analyzed().rdd().id() for df in _TRI_STATS_MEMO.values()
-        }
-        left = persistent_ids() - before - memo
-        if left:
-            leaks[name] = left
-    assert not leaks, f"graph rows left persistent RDDs: {leaks}"
 
 
 def test_dropping_tri_stats_memo_releases_its_blocks(spark, sf_dir, persistent_ids):
